@@ -42,23 +42,32 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["global_ordered", "ntile_from_rank"]
+__all__ = ["global_ordered", "ntile_from_rank", "two_sample_ecdf"]
 
 _BUCKET = 1024  # bucket-group width for the hierarchical offset fold
 
 
 def _exclusive_offsets(
-    totals: DataFrame, cols: list[str], num_parts: int | None = None
+    totals: DataFrame,
+    cols: list[str],
+    num_parts: int | None = None,
+    *,
+    grand: bool = False,
+    next_min: tuple[str, ...] = (),
 ) -> DataFrame:
     """Exclusive prefix sums of ``cols`` over the per-bucket totals
-    table, ordered by ``_pid`` — output columns ``_off_<c>``.
+    table, ordered by ``_pid`` — output columns ``_off_<c>``.  The same
+    fold can add, per pid, ``_all_<c>`` — the sum over ALL pids — when
+    ``grand`` is set, and for each ``next_min`` column ``m``
+    ``_nxt_<m>`` — the minimum of ``m`` over the strictly LATER pids
+    (NULL on the last one).
 
     Hierarchical two-level fold so the cost stays near-linear in the
     bucket count P: within 1024-pid groups the fold is a PARTITIONED
     window (partitionBy the group id — each window partition holds
     ≤1024 metadata rows, never data); across groups the fold runs
-    over only ⌈P/1024⌉ group-total rows (a broadcast non-equi join
-    of metadata). A flat P² non-equi fold would be quadratic at
+    over only ⌈P/1024⌉ group-total rows (a broadcast cross join of
+    metadata). A flat P² non-equi fold would be quadratic at
     cluster partition counts (P=10⁵ → 10¹⁰ pairs); this shape is
     one small shuffle + (P/1024)² metadata pairs through P≈10⁶.
 
@@ -71,12 +80,13 @@ def _exclusive_offsets(
     # in the common ≤1024-pid path this keeps the whole fold ONE
     # DataFrame op — every extra op here re-analyzes the caller's full
     # data lineage, which is pure driver latency (r16, guide §7.3)
-    w_excl = (
-        Window.partitionBy(F.expr(f"_pid DIV {_BUCKET}"))
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    w = Window.partitionBy(F.expr(f"_pid DIV {_BUCKET}")).orderBy("_pid")
+    w_excl = w.rowsBetween(Window.unboundedPreceding, -1)
+    w_after = w.rowsBetween(1, Window.unboundedFollowing)
     if num_parts is not None and num_parts <= _BUCKET:
+        w_all = w.rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing
+        )
         return totals.select(
             "_pid",
             *[
@@ -85,6 +95,11 @@ def _exclusive_offsets(
                 .alias(f"_off_{c}")
                 for c in cols
             ],
+            *[
+                F.sum(c).over(w_all).cast("long").alias(f"_all_{c}")
+                for c in (cols if grand else ())
+            ],
+            *[F.min(m).over(w_after).alias(f"_nxt_{m}") for m in next_min],
         )
     t = totals.withColumn("_bkt", F.expr(f"_pid DIV {_BUCKET}"))
     within = t.select(
@@ -96,21 +111,35 @@ def _exclusive_offsets(
             .alias(f"_w_{c}")
             for c in cols
         ],
+        *[F.min(m).over(w_after).alias(f"_wn_{m}") for m in next_min],
     )
     bkt_tot = t.groupBy("_bkt").agg(
-        *[F.sum(c).cast("long").alias(c) for c in cols]
+        *[F.sum(c).cast("long").alias(c) for c in cols],
+        *[F.min(m).alias(m) for m in next_min],
     )
+    # every group pairs with itself, so the cross join keeps each
+    # group; earlier/later groups are picked by conditional folds
     ba, bb = bkt_tot.alias("ba"), bkt_tot.alias("bb")
+    before = F.col("bb._bkt") < F.col("ba._bkt")
+    after = F.col("bb._bkt") > F.col("ba._bkt")
     bkt_off = (
-        ba.join(F.broadcast(bb), F.col("bb._bkt") < F.col("ba._bkt"), "left")
+        ba.crossJoin(F.broadcast(bb))
         .groupBy(F.col("ba._bkt").alias("_bkt"))
         .agg(
             *[
-                F.coalesce(F.sum(f"bb.{c}"), F.lit(0))
+                F.coalesce(F.sum(F.when(before, F.col(f"bb.{c}"))), F.lit(0))
                 .cast("long")
                 .alias(f"_b_{c}")
                 for c in cols
-            ]
+            ],
+            *[
+                F.sum(f"bb.{c}").cast("long").alias(f"_all_{c}")
+                for c in (cols if grand else ())
+            ],
+            *[
+                F.min(F.when(after, F.col(f"bb.{m}"))).alias(f"_bn_{m}")
+                for m in next_min
+            ],
         )
     )
     return within.join(F.broadcast(bkt_off), "_bkt").select(
@@ -119,7 +148,80 @@ def _exclusive_offsets(
             (F.col(f"_w_{c}") + F.col(f"_b_{c}")).alias(f"_off_{c}")
             for c in cols
         ],
+        *[f"_all_{c}" for c in (cols if grand else ())],
+        *[
+            F.coalesce(F.col(f"_wn_{m}"), F.col(f"_bn_{m}")).alias(f"_nxt_{m}")
+            for m in next_min
+        ],
     )
+
+
+def _with_bucket_id(
+    df: DataFrame,
+    bucket_key: Column | str,
+    num_parts: int,
+    *,
+    bucket_desc: bool = False,
+    bounds: tuple[int, int] | None = None,
+) -> DataFrame:
+    """``df`` plus ``_pid``, the ordered bucket id of each row's own
+    key value: a pure function of (key, lo, hi, num_parts) — identical
+    in every plan branch.  width = ceil(span / num_parts) ≥ 1, so
+    _pid ∈ [0, num_parts-1].  Without static ``bounds`` (lo, hi) is
+    one global min/max aggregate, broadcast."""
+    key = (
+        F.col(bucket_key) if isinstance(bucket_key, str) else bucket_key
+    ).cast("long")
+    # r16: a STRING bucket_key (the common case — ~40 of the ~50 call
+    # sites) takes a single-select path with the bucket id as one SQL
+    # expression; the old shape added two withColumns, and every
+    # DataFrame op here re-analyzes the caller's whole lineage (pure
+    # driver latency at any scale — guide §7.3 "query planning").
+    # The SQL string computes the IDENTICAL integer arithmetic on the
+    # same casts, so _pid is bit-equal; a Column bucket_key keeps the
+    # two-step shape (a Column can't be inlined into a SQL string).
+    key_sql = (
+        f"CAST(`{bucket_key}` AS BIGINT)"
+        if isinstance(bucket_key, str)
+        else None
+    )
+    if bounds is not None:
+        lo, hi = int(bounds[0]), int(bounds[1])
+        width = (hi - lo + num_parts) // num_parts
+        if key_sql is not None:
+            pos_sql = (
+                f"CAST(({hi}L - {key_sql}) AS BIGINT)"
+                if bucket_desc
+                else f"CAST(({key_sql} - {lo}L) AS BIGINT)"
+            )
+            return df.select(
+                "*", F.expr(f"{pos_sql} DIV {width}").alias("_pid")
+            )
+        pos = (F.lit(hi) - key) if bucket_desc else (key - F.lit(lo))
+        return df.withColumn("_pos", pos.cast("long")).withColumn(
+            "_pid", F.expr(f"_pos DIV {width}")
+        )
+    mm = df.agg(F.min(key).alias("_lo"), F.max(key).alias("_hi"))
+    wid_sql = f"((_hi - _lo + {num_parts}) DIV {num_parts})"
+    if key_sql is not None:
+        pos_sql = (
+            f"CAST((_hi - {key_sql}) AS BIGINT)"
+            if bucket_desc
+            else f"CAST(({key_sql} - _lo) AS BIGINT)"
+        )
+        return df.crossJoin(F.broadcast(mm)).select(
+            "*", F.expr(f"{pos_sql} DIV {wid_sql}").alias("_pid")
+        )
+    pos = (F.col("_hi") - key) if bucket_desc else (key - F.col("_lo"))
+    return (
+        df.crossJoin(F.broadcast(mm))
+        .withColumn("_pos", pos.cast("long"))
+        .withColumn("_pid", F.expr(f"_pos DIV {wid_sql}"))
+    )
+
+
+def _default_parts(df: DataFrame) -> int:
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
 
 
 def global_ordered(
@@ -160,65 +262,10 @@ def global_ordered(
     sums = sums or {}
     out_cols = df.columns
     if num_parts is None:
-        num_parts = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-    key = (
-        F.col(bucket_key) if isinstance(bucket_key, str) else bucket_key
-    ).cast("long")
-    # ordered bucket id from the row's own key value: a pure function
-    # of (key, lo, hi, num_parts) — identical in every plan branch.
-    # width = ceil(span / num_parts) ≥ 1, so _pid ∈ [0, num_parts-1].
-    #
-    # r16: a STRING bucket_key (the common case — ~40 of the ~50 call
-    # sites) takes a single-select path with the bucket id as one SQL
-    # expression; the old shape added two withColumns, and every
-    # DataFrame op here re-analyzes the caller's whole lineage (pure
-    # driver latency at any scale — guide §7.3 "query planning").
-    # The SQL string computes the IDENTICAL integer arithmetic on the
-    # same casts, so _pid is bit-equal; a Column bucket_key keeps the
-    # two-step shape (a Column can't be inlined into a SQL string).
-    key_sql = (
-        f"CAST(`{bucket_key}` AS BIGINT)"
-        if isinstance(bucket_key, str)
-        else None
+        num_parts = _default_parts(df)
+    bucketed = _with_bucket_id(
+        df, bucket_key, num_parts, bucket_desc=bucket_desc, bounds=bounds
     )
-    if bounds is not None:
-        lo, hi = int(bounds[0]), int(bounds[1])
-        width = (hi - lo + num_parts) // num_parts
-        if key_sql is not None:
-            pos_sql = (
-                f"CAST(({hi}L - {key_sql}) AS BIGINT)"
-                if bucket_desc
-                else f"CAST(({key_sql} - {lo}L) AS BIGINT)"
-            )
-            bucketed = df.select(
-                "*", F.expr(f"{pos_sql} DIV {width}").alias("_pid")
-            )
-        else:
-            pos = (F.lit(hi) - key) if bucket_desc else (key - F.lit(lo))
-            bucketed = df.withColumn("_pos", pos.cast("long")).withColumn(
-                "_pid", F.expr(f"_pos DIV {width}")
-            )
-    else:
-        mm = df.agg(F.min(key).alias("_lo"), F.max(key).alias("_hi"))
-        wid_sql = f"((_hi - _lo + {num_parts}) DIV {num_parts})"
-        if key_sql is not None:
-            pos_sql = (
-                f"CAST((_hi - {key_sql}) AS BIGINT)"
-                if bucket_desc
-                else f"CAST(({key_sql} - _lo) AS BIGINT)"
-            )
-            bucketed = df.crossJoin(F.broadcast(mm)).select(
-                "*", F.expr(f"{pos_sql} DIV {wid_sql}").alias("_pid")
-            )
-        else:
-            pos = (F.col("_hi") - key) if bucket_desc else (key - F.col("_lo"))
-            bucketed = (
-                df.crossJoin(F.broadcast(mm))
-                .withColumn("_pos", pos.cast("long"))
-                .withColumn("_pid", F.expr(f"_pos DIV {wid_sql}"))
-            )
     # r15: the bucketed frame has TWO consumers (the per-bucket window
     # below and the per-bucket totals) — uncached, both replay the
     # caller's whole upstream lineage, so every prefix-machine user
@@ -270,6 +317,69 @@ def global_ordered(
         for dst in sums.values()
     )
     return local.join(F.broadcast(offsets), "_pid").select(*proj)
+
+
+def two_sample_ecdf(
+    grid: DataFrame, *, num_parts: int | None = None
+) -> DataFrame:
+    """Exact two-sample ECDF over a value grid: ``grid`` holds one row
+    per distinct integral ``v_cents`` with BIGINT group counts ``c1``
+    and ``c2``; the result adds, per grid point, the inclusive running
+    counts ``cum1``/``cum2``, the next grid value ``v_next`` (NULL on
+    the last point — ``lead(v_cents) OVER (ORDER BY v_cents)``) and
+    the group totals ``n1``/``n2`` — all from ONE bucketed prefix pass.
+
+    Within a bucket ``v_next`` is a ``lead`` in the ``_pid`` window;
+    a bucket's last row takes the minimum value of the later buckets,
+    and ``n1``/``n2`` are the grand totals — both read from the same
+    ``_pid``-ordered fold over the per-bucket totals that yields the
+    exclusive offsets (:func:`_exclusive_offsets`).  No rank self-join,
+    no separate totals aggregate, and nothing is cached: every frame
+    here has one consumer, and the bucketed window's two consumers
+    plan one identical ``_pid`` exchange that AQE runs once."""
+    if num_parts is None:
+        num_parts = _default_parts(grid)
+    # the min/max of the bare group key lets Catalyst drop the grid
+    # aggregate under it (RemoveRedundantAggregates): that pass reads
+    # the input's key column itself, CONCURRENTLY with the grid stage
+    # — measured faster than serializing it behind the grid exchange
+    bucketed = _with_bucket_id(grid, "v_cents", num_parts)
+    w = Window.partitionBy("_pid").orderBy("v_cents")
+    w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    # the explicit (always true) filter matches the isnotnull(_pid)
+    # Catalyst infers from the offsets join below, so both consumers
+    # of ``local`` plan the same _pid exchange and AQE runs it once
+    local = bucketed.where("_pid IS NOT NULL").select(
+        "v_cents",
+        "c1",
+        "c2",
+        "_pid",
+        F.sum("c1").over(w_run).cast("long").alias("_l1"),
+        F.sum("c2").over(w_run).cast("long").alias("_l2"),
+        F.lead("v_cents").over(w).alias("_lnext"),
+    )
+    # bucket totals as the LAST running count (counts are ≥ 0, so it
+    # is the max): reading the window output keeps this branch on the
+    # window's own _pid exchange — a plain sum(c1) lets Catalyst prune
+    # the window and plan a second shuffle
+    totals = local.groupBy("_pid").agg(
+        F.max("_l1").alias("_t1"),
+        F.max("_l2").alias("_t2"),
+        F.min("v_cents").alias("_vmin"),
+    )
+    offsets = _exclusive_offsets(
+        totals, ["_t1", "_t2"], num_parts, grand=True, next_min=("_vmin",)
+    )
+    return local.join(F.broadcast(offsets), "_pid").selectExpr(
+        "v_cents",
+        "c1",
+        "c2",
+        "CAST(_off__t1 + _l1 AS BIGINT) AS cum1",
+        "CAST(_off__t2 + _l2 AS BIGINT) AS cum2",
+        "coalesce(_lnext, _nxt__vmin) AS v_next",
+        "_all__t1 AS n1",
+        "_all__t2 AS n2",
+    )
 
 
 def sql_ntile_from_rank(rk: str, n: str, k: int) -> str:

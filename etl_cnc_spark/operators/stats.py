@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import table
-from ..operators.prefix import global_ordered
+from ..operators.prefix import global_ordered, two_sample_ecdf
 from ..registry import register
 from ..utils import cents, q4, sql_q4
 
@@ -417,6 +417,29 @@ KS_G2 = "purchase"
 KS_CALPHA = "1.358"
 
 
+def _ks_ecdf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The 'click' vs 'purchase' two-sample ECDF over the integer-cents
+    value grid: events hash-aggregated to one row per distinct cents
+    value with the group counts c1/c2, then ONE bucketed prefix pass
+    (:func:`two_sample_ecdf`) adds cum1, cum2, v_next, n1 and n2 to
+    every grid point.  The ECDF tests below are each one aggregate or
+    projection over this frame."""
+    grid = (
+        table(spark, sf_dir, "events")
+        .where(F.col("event_type").isin(KS_G1, KS_G2))
+        .selectExpr(
+            "event_type",
+            "CAST(floor(value * 100 + 0.5D) AS BIGINT) AS v_cents",
+        )
+        .groupBy("v_cents")
+        .agg(
+            F.expr(f"CAST(count_if(event_type = '{KS_G1}') AS BIGINT) AS c1"),
+            F.expr(f"CAST(count_if(event_type = '{KS_G2}') AS BIGINT) AS c2"),
+        )
+    )
+    return two_sample_ecdf(grid)
+
+
 @register(
     "stat_ks_test",
     oracle=f"""
@@ -460,49 +483,26 @@ def stat_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: values are quantized to integer cents and hash-
     aggregated FIRST, so the ECDF fold runs over the bounded value
     DOMAIN (≤ |price grid| rows), not the input rows; and the
-    cumulative counts go through ``global_ordered``'s bucketed prefix
-    machine (operators/prefix.py) rather than an unpartitioned
-    ``Window.orderBy`` — a wide-domain money column (cents grids can
-    reach 10⁷+ distinct points at 100 TB) never funnels through one
-    partition. Cumulative counts are integer (exact, order-free),
-    with doubles appearing only in the final per-gridpoint
-    division."""
-    e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(KS_G1, KS_G2)
+    cumulative counts and totals come from ONE bucketed prefix pass
+    (``_ks_ecdf`` → ``prefix.two_sample_ecdf``) rather than an
+    unpartitioned ``Window.orderBy`` — a wide-domain money column
+    (cents grids can reach 10⁷+ distinct points at 100 TB) never
+    funnels through one partition. Cumulative counts are integer
+    (exact, order-free), with doubles appearing only in the final
+    per-gridpoint division."""
+    gap = (
+        F.col("cum1").cast("double") / F.col("n1")
+        - F.col("cum2").cast("double") / F.col("n2")
     )
-    ev = e.select(
-        "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v_cents"),
-    )
-    grid = ev.groupBy("v_cents").agg(
-        F.count_if(F.col("event_type") == KS_G1).cast("long").alias("c1"),
-        F.count_if(F.col("event_type") == KS_G2).cast("long").alias("c2"),
-    ).localCheckpoint(eager=False)
-    cum = global_ordered(
-        grid,
-        [F.col("v_cents")],
-        bucket_key="v_cents",
-        sums={"c1": "cum1", "c2": "cum2"},
-        rank_col=None,
-    ).select("v_cents", "cum1", "cum2").localCheckpoint(eager=False)
-    totals = grid.agg(
-        F.sum("c1").cast("long").alias("n1"), F.sum("c2").cast("long").alias("n2")
-    )
-    d = (
-        cum.crossJoin(F.broadcast(totals))
-        .agg(
-            F.max(
-                F.abs(
-                    F.col("cum1").cast("double") / F.col("n1")
-                    - F.col("cum2").cast("double") / F.col("n2")
-                )
-            ).alias("ks_d")
-        )
+    d = _ks_ecdf(spark, sf_dir).agg(
+        F.max("n1").alias("n1"),
+        F.max("n2").alias("n2"),
+        F.max(F.abs(gap)).alias("ks_d"),
     )
     crit = F.lit(float(KS_CALPHA)) * F.sqrt(
         (F.col("n1") + F.col("n2")).cast("double") / (F.col("n1") * F.col("n2"))
     )
-    return d.crossJoin(F.broadcast(totals)).select(
+    return d.select(
         "n1",
         "n2",
         q4(F.col("ks_d")).alias("ks_d"),
@@ -614,8 +614,8 @@ def stat_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MWU_G1 = "click"
-MWU_G2 = "purchase"
+# the groups of the shared _ks_ecdf grid the Spark side reads
+MWU_G1, MWU_G2 = KS_G1, KS_G2
 
 
 @register(
@@ -666,52 +666,26 @@ def stat_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     values quantize to integer cents and hash-aggregate FIRST, so
     ranks come from a fold over the value DOMAIN, not the input
     rows (a naive rank() over 10^11 rows would be a single-partition
-    sort of the whole fact table), and that fold runs through
-    ``global_ordered``'s bucketed prefix machine (operators/
-    prefix.py), never an unpartitioned window — the cents grid can
-    be 10⁷+ points at 100 TB. Midranks stay INTEGER by tracking
+    sort of the whole fact table), and that fold is one aggregate
+    over the shared ``_ks_ecdf`` frame (one bucketed prefix pass),
+    never an unpartitioned window — the cents grid can be 10⁷+
+    points at 100 TB. Midranks stay INTEGER by tracking
     2x the rank (2·before + t + 1), so the rank-sum R1 is an exact
     order-free integer; doubles appear only in the final z formula,
     evaluated once. The tie term Σ(t³−t) accumulates as int64 —
     at 10^11 rows per value the cube overflows, so the 100 TB variant
     promotes it to decimal(38,0) (same one-line change as
     agg_corr_exact's syy accumulator)."""
-    e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(MWU_G1, MWU_G2)
-    )
-    ev = e.select(
-        "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v_cents"),
-    )
-    grid = ev.groupBy("v_cents").agg(
-        F.count_if(F.col("event_type") == MWU_G1).cast("long").alias("c1"),
-        F.count_if(F.col("event_type") == MWU_G2).cast("long").alias("c2"),
-    ).localCheckpoint(eager=False)
-    # Inclusive running sum from the bucketed prefix machine; the
-    # oracle's "UNBOUNDED PRECEDING AND 1 PRECEDING" exclusive sum is
-    # recovered as cum_t − t.
-    with_t = grid.withColumn("t", (F.col("c1") + F.col("c2")).cast("long"))
-    cum = global_ordered(
-        with_t,
-        [F.col("v_cents")],
-        bucket_key="v_cents",
-        sums={"t": "cum_t"},
-        rank_col=None,
-    ).select(
-        "c1",
-        "c2",
-        "t",
-        (F.col("cum_t") - F.col("t")).alias("before"),
-    ).localCheckpoint(eager=False)
-    sums = cum.agg(
-        F.sum("c1").cast("long").alias("n1"),
-        F.sum("c2").cast("long").alias("n2"),
-        F.sum(F.col("c1") * (2 * F.col("before") + F.col("t") + 1))
-        .cast("long")
-        .alias("r1x2"),
-        F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t"))
-        .cast("long")
-        .alias("tie3"),
+    # midrank bookkeeping: t values tie at this grid point, and
+    # ``before`` values sit strictly below it (the oracle's exclusive
+    # running sum)
+    t = F.col("c1") + F.col("c2")
+    before = F.col("cum1") + F.col("cum2") - t
+    sums = _ks_ecdf(spark, sf_dir).agg(
+        F.max("n1").alias("n1"),
+        F.max("n2").alias("n2"),
+        F.sum(F.col("c1") * (2 * before + t + 1)).cast("long").alias("r1x2"),
+        F.sum(t * t * t - t).cast("long").alias("tie3"),
     )
     n1, n2 = F.col("n1"), F.col("n2")
     u1 = (F.col("r1x2") - n1 * (n1 + 1)).cast("double") / F.lit(2.0)
@@ -2319,8 +2293,8 @@ def stat_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stat_wasserstein_1d",
     bench=True,  # the ECDF-grid prefix-machine representative: the
     # last plan family with no frozen number (VERDICT r7 item 8) —
-    # hash-agg to the bounded cents grid, ONE bucketed prefix pass,
-    # grid-sized rank+1 self-join, broadcast totals.
+    # hash-agg to the bounded cents grid, ONE bucketed prefix pass
+    # (cum counts, totals and next grid value), one final aggregate.
     oracle=f"""
     WITH ev AS (
         SELECT event_type,
@@ -2361,69 +2335,28 @@ def stat_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     ECDFs are 1 there).
 
     Scale shape: hash-aggregate to the bounded cents grid FIRST, then
-    ONE bucketed-prefix pass (``global_ordered``) yields both the
-    cumulative counts and the rank used to fetch the next grid value
-    (a grid-sized self-equi-join on rank+1 — never a lead() over an
-    unpartitioned window).  The summand is an exact BIGINT
+    ONE bucketed-prefix pass (``_ks_ecdf`` → ``prefix.two_sample_ecdf``)
+    yields the cumulative counts, the totals and the next grid value
+    (a ``lead`` inside each ``_pid`` bucket, the next bucket's minimum
+    at its edge — no rank+1 self-join and never a lead() over an
+    unpartitioned window); the sum is one aggregate over that frame,
+    and nothing is persisted.  The summand is an exact BIGINT
     (|cum1·n2 − cum2·n1| ≤ n1·n2, times the cents gap; the total is
     bounded by n1·n2·span — within int64 through ~1e9×1e9-row
     groups × 10^7-cent spans split across, which a 100 TB run stays
     under because the grid aggregate has already collapsed the rows),
     so the sum is order-free and the only double is the final
     division."""
-    e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(KS_G1, KS_G2)
+    # the last grid point's v_next is NULL, so sum() skips its summand
+    num = _ks_ecdf(spark, sf_dir).agg(
+        F.expr("max(n1) AS n1"),
+        F.expr("max(n2) AS n2"),
+        F.expr(
+            "CAST(sum(abs(cum1 * n2 - cum2 * n1)"
+            " * (v_next - v_cents)) AS BIGINT) AS w1_num"
+        ),
     )
-    # grid is BOUNDED (cents-domain-sized, not data-sized) and feeds
-    # FOUR consumers (global_ordered's min/max pass, its bucketed
-    # prefix, its per-bucket totals, and the n1/n2 totals below);
-    # without the lazy checkpoint each consumer replays the full
-    # events scan + aggregate — 10 parquet scans / 19 exchanges in
-    # the r12 plan, the r13 steady-state elevation (1.4-1.7x gate)
-    # (r16: expressions as JVM-parsed SQL strings — the profile showed
-    # ~half this query's cold wall was driver-side plan construction)
-    grid = (
-        e.selectExpr(
-            "event_type",
-            "CAST(floor(value * 100 + 0.5D) AS BIGINT) AS v_cents",
-        )
-        .groupBy("v_cents")
-        .agg(
-            F.expr(f"CAST(count_if(event_type = '{KS_G1}') AS BIGINT) AS c1"),
-            F.expr(f"CAST(count_if(event_type = '{KS_G2}') AS BIGINT) AS c2"),
-        )
-        .persist()
-    )
-    # cum is the same grid-sized frame with two consumers (itself and
-    # its rank+1 shift).  r15: both reuse points moved from lazy
-    # localCheckpoint to persist() — the checkpoint's RDD
-    # materialization BARRIER serializes the stage pipeline (the
-    # cindex A/B measured the same swap), while the cache shares one
-    # computation with lineage kept; the r14 release wrapper bounds
-    # the cache to this key's lifetime.
-    cum = global_ordered(
-        grid,
-        [F.col("v_cents")],
-        bucket_key="v_cents",
-        sums={"c1": "cum1", "c2": "cum2"},
-        rank_col="rk",
-    ).persist()
-    nxt = cum.selectExpr("rk - 1 AS rk", "v_cents AS v_next")
-    totals = grid.agg(
-        F.expr("CAST(sum(c1) AS BIGINT) AS n1"),
-        F.expr("CAST(sum(c2) AS BIGINT) AS n2"),
-    )
-    num = (
-        cum.join(nxt, "rk")
-        .crossJoin(F.broadcast(totals))
-        .agg(
-            F.expr(
-                "CAST(sum(abs(cum1 * n2 - cum2 * n1)"
-                " * (v_next - v_cents)) AS BIGINT) AS w1_num"
-            )
-        )
-    )
-    return num.crossJoin(F.broadcast(totals)).select(
+    return num.select(
         "n1",
         "n2",
         q4(
@@ -2484,51 +2417,29 @@ def stat_cvm_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ_pooled (ECDF1 − ECDF2)² — KS's max replaced by the integrated
     squared gap, so T sees cumulative small divergences KS ignores.
 
-    Scale shape: identical to stat_ks_test — bounded cents grid via
-    hash aggregate, cumulative counts through the bucketed prefix
-    machine, totals as a broadcast 1-row frame.  Each grid point's
+    Scale shape: identical to stat_ks_test — one aggregate over the
+    shared ``_ks_ecdf`` frame (bounded cents grid, cumulative counts
+    and totals from one bucketed prefix pass).  Each grid point's
     squared gap is fixed-point quantized (×1e9, floor) BEFORE the
     weighted sum, so the aggregate is an exact integer on both
     engines (a raw double sum would be exchange-order-dependent);
     the squared gap itself is computed from the same expression text
     on both sides."""
-    e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(KS_G1, KS_G2)
-    )
-    grid = e.select(
-        "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v_cents"),
-    ).groupBy("v_cents").agg(
-        F.count_if(F.col("event_type") == KS_G1).cast("long").alias("c1"),
-        F.count_if(F.col("event_type") == KS_G2).cast("long").alias("c2"),
-    ).localCheckpoint(eager=False)
-    cum = global_ordered(
-        grid,
-        [F.col("v_cents")],
-        bucket_key="v_cents",
-        sums={"c1": "cum1", "c2": "cum2"},
-        rank_col=None,
-    ).localCheckpoint(eager=False)
-    totals = grid.agg(
-        F.sum("c1").cast("long").alias("n1"),
-        F.sum("c2").cast("long").alias("n2"),
-    )
     gap = (
         F.col("cum1").cast("double") / F.col("n1")
         - F.col("cum2").cast("double") / F.col("n2")
     )
-    terms = (
-        cum.crossJoin(F.broadcast(totals))
-        .agg(
-            F.sum(
-                (F.col("c1") + F.col("c2"))
-                * F.floor(F.pow(gap, 2) * _CVM_Q + 0.5).cast("long")
-            )
-            .cast("long")
-            .alias("tq")
+    terms = _ks_ecdf(spark, sf_dir).agg(
+        F.max("n1").alias("n1"),
+        F.max("n2").alias("n2"),
+        F.sum(
+            (F.col("c1") + F.col("c2"))
+            * F.floor(F.pow(gap, 2) * _CVM_Q + 0.5).cast("long")
         )
+        .cast("long")
+        .alias("tq"),
     )
-    return terms.crossJoin(F.broadcast(totals)).select(
+    return terms.select(
         "n1",
         "n2",
         q4(
@@ -2933,48 +2844,28 @@ def stat_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct pooled values (the Bj = N term is excluded; its
     numerator is identically zero).
 
-    Scale shape: the stat_ks_test template — bounded cents grid,
-    cumulative counts through the bucketed prefix machine, totals
-    broadcast; the per-gridpoint term is fixed-point quantized before
+    Scale shape: the stat_ks_test template — one aggregate over the
+    shared ``_ks_ecdf`` frame (M1j = cum1, Bj = cum1 + cum2); the
+    per-gridpoint term is fixed-point quantized before
     the fold so the sum is an exact integer, and N·M1j − n1·Bj is an
     exact BIGINT promoted once to double."""
-    e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(KS_G1, KS_G2)
-    )
-    grid = e.select(
-        "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v_cents"),
-    ).groupBy("v_cents").agg(
-        F.count_if(F.col("event_type") == KS_G1).cast("long").alias("c1"),
-        F.count_if(F.col("event_type") == KS_G2).cast("long").alias("c2"),
-    ).localCheckpoint(eager=False)
-    grid = grid.withColumn("cb", F.col("c1") + F.col("c2"))
-    cum = global_ordered(
-        grid,
-        [F.col("v_cents")],
-        bucket_key="v_cents",
-        sums={"c1": "m1", "cb": "b"},
-        rank_col=None,
-    ).localCheckpoint(eager=False)
-    totals = grid.agg(
-        F.sum("c1").cast("long").alias("n1"),
-        F.sum("c2").cast("long").alias("n2"),
-        F.sum("cb").cast("long").alias("nn"),
-    )
-    num = (F.col("nn") * F.col("m1") - F.col("n1") * F.col("b")).cast("double")
+    m1, b = F.col("cum1"), F.col("cum1") + F.col("cum2")
+    nn = F.col("n1") + F.col("n2")
+    num = (nn * m1 - F.col("n1") * b).cast("double")
     term = F.floor(
         (F.col("c1") + F.col("c2"))
         * F.pow(num, 2)
-        / (F.col("b").cast("double") * (F.col("nn") - F.col("b")))
+        / (b.cast("double") * (nn - b))
         * _AD_Q
         + 0.5
     ).cast("long")
-    terms = (
-        cum.crossJoin(F.broadcast(totals))
-        .where(F.col("b") < F.col("nn"))
-        .agg(F.sum(term).cast("long").alias("tq"))
+    # the B = N point is excluded (its numerator is identically zero)
+    terms = _ks_ecdf(spark, sf_dir).agg(
+        F.max("n1").alias("n1"),
+        F.max("n2").alias("n2"),
+        F.sum(F.when(b < nn, term)).cast("long").alias("tq"),
     )
-    return terms.crossJoin(F.broadcast(totals)).select(
+    return terms.select(
         "n1",
         "n2",
         q4(
@@ -3168,31 +3059,10 @@ def stat_qq_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     companion to the KS/CvM/AD gap statistics.
 
     Scale shape: the exact quantiles come from the bounded cents
-    grid + bucketed-prefix cumulative counts (the stat_ks_test
-    machinery) crossed with a 9-row broadcast decile frame — never a
+    grid + bucketed-prefix cumulative counts (the shared ``_ks_ecdf``
+    frame) crossed with a 9-row broadcast decile frame — never a
     per-group sort of raw rows and never an approximate
     percentile: at any SF the post-grid work is |grid|×9."""
-    e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(KS_G1, KS_G2)
-    )
-    grid = e.select(
-        "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v_cents"),
-    ).groupBy("v_cents").agg(
-        F.count_if(F.col("event_type") == KS_G1).cast("long").alias("c1"),
-        F.count_if(F.col("event_type") == KS_G2).cast("long").alias("c2"),
-    ).localCheckpoint(eager=False)
-    cum = global_ordered(
-        grid,
-        [F.col("v_cents")],
-        bucket_key="v_cents",
-        sums={"c1": "cum1", "c2": "cum2"},
-        rank_col=None,
-    ).localCheckpoint(eager=False)
-    totals = grid.agg(
-        F.sum("c1").cast("long").alias("n1"),
-        F.sum("c2").cast("long").alias("n2"),
-    )
     ps = spark.range(1, 10).select(F.col("id").cast("long").alias("dec"))
     q1 = F.min(
         F.when(10 * F.col("cum1") >= F.col("dec") * F.col("n1"), F.col("v_cents"))
@@ -3201,7 +3071,7 @@ def stat_qq_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(10 * F.col("cum2") >= F.col("dec") * F.col("n2"), F.col("v_cents"))
     ).cast("long")
     return (
-        cum.crossJoin(F.broadcast(totals))
+        _ks_ecdf(spark, sf_dir)
         .crossJoin(F.broadcast(ps))
         .groupBy("dec")
         .agg(
@@ -6090,52 +5960,29 @@ def stat_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     unlike KS, is differentiable in the mass moved (the two-sample
     counterpart of the energy statistic behind distance correlation).
 
-    Scale shape: the same bounded-cents-grid prefix machine as
-    stat_wasserstein_1d (hash-aggregate to the grid, ONE bucketed
-    prefix pass for both cumulative counts and rank, grid-sized
-    rank+1 self-join for the gap); the squared ECDF gap is
+    Scale shape: the same ``_ks_ecdf`` frame as stat_wasserstein_1d
+    (hash-aggregate to the grid, ONE bucketed prefix pass for the
+    cumulative counts, the totals and the next grid value — no rank+1
+    self-join, nothing persisted); the squared ECDF gap is
     fixed-point quantized (x1e9, floor) per grid point BEFORE the
     gap-weighted sum, so the aggregate is an exact BIGINT on both
     engines."""
-    e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(KS_G1, KS_G2)
-    )
-    grid = e.select(
-        "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v_cents"),
-    ).groupBy("v_cents").agg(
-        F.count_if(F.col("event_type") == KS_G1).cast("long").alias("c1"),
-        F.count_if(F.col("event_type") == KS_G2).cast("long").alias("c2"),
-    ).localCheckpoint(eager=False)
-    cum = global_ordered(
-        grid,
-        [F.col("v_cents")],
-        bucket_key="v_cents",
-        sums={"c1": "cum1", "c2": "cum2"},
-        rank_col="rk",
-    ).localCheckpoint(eager=False)
-    nxt = cum.select((F.col("rk") - 1).alias("rk"), F.col("v_cents").alias("v_next"))
-    totals = grid.agg(
-        F.sum("c1").cast("long").alias("n1"),
-        F.sum("c2").cast("long").alias("n2"),
-    )
     gap = (
         F.col("cum1").cast("double") / F.col("n1")
         - F.col("cum2").cast("double") / F.col("n2")
     )
-    num = (
-        cum.join(nxt, "rk")
-        .crossJoin(F.broadcast(totals))
-        .agg(
-            F.sum(
-                F.floor(F.pow(gap, 2) * _ED_Q + 0.5).cast("long")
-                * (F.col("v_next") - F.col("v_cents"))
-            )
-            .cast("long")
-            .alias("eq")
+    # the last grid point's v_next is NULL, so sum() skips its summand
+    num = _ks_ecdf(spark, sf_dir).agg(
+        F.max("n1").alias("n1"),
+        F.max("n2").alias("n2"),
+        F.sum(
+            F.floor(F.pow(gap, 2) * _ED_Q + 0.5).cast("long")
+            * (F.col("v_next") - F.col("v_cents"))
         )
+        .cast("long")
+        .alias("eq"),
     )
-    return num.crossJoin(F.broadcast(totals)).select(
+    return num.select(
         "n1",
         "n2",
         q4(
@@ -6196,32 +6043,14 @@ def stat_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     magnitude banding.
 
     Scale shape: never the n1*n2 pair join — on the bounded cents
-    grid, #(x>y) = sum over grid of c1(v) * cum2(v-), so one hash
-    aggregate + ONE bucketed prefix pass + a broadcast totals frame;
+    grid, #(x>y) = sum over grid of c1(v) * cum2(v-), so one
+    aggregate over the shared ``_ks_ecdf`` frame (one hash aggregate +
+    ONE bucketed prefix pass);
     both dominance counts are exact BIGINTs (bounded by n1*n2 —
     within int64 through ~3e9 x 3e9 rows)."""
-    e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(KS_G1, KS_G2)
-    )
-    grid = e.select(
-        "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v_cents"),
-    ).groupBy("v_cents").agg(
-        F.count_if(F.col("event_type") == KS_G1).cast("long").alias("c1"),
-        F.count_if(F.col("event_type") == KS_G2).cast("long").alias("c2"),
-    ).localCheckpoint(eager=False)
-    cum = global_ordered(
-        grid,
-        [F.col("v_cents")],
-        bucket_key="v_cents",
-        sums={"c2": "cum2"},
-        rank_col=None,
-    ).localCheckpoint(eager=False)
-    totals = grid.agg(
-        F.sum("c1").cast("long").alias("n1"),
-        F.sum("c2").cast("long").alias("n2"),
-    )
-    num = cum.crossJoin(F.broadcast(totals)).agg(
+    num = _ks_ecdf(spark, sf_dir).agg(
+        F.max("n1").alias("n1"),
+        F.max("n2").alias("n2"),
         F.sum(F.col("c1") * (F.col("cum2") - F.col("c2")))
         .cast("long")
         .alias("n_gt"),
@@ -6232,7 +6061,7 @@ def stat_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = (F.col("n_gt") - F.col("n_lt")).cast("double") / F.col("n1") / F.col(
         "n2"
     )
-    return num.crossJoin(F.broadcast(totals)).select(
+    return num.select(
         "n1",
         "n2",
         q4(delta).alias("delta"),
@@ -6310,42 +6139,16 @@ def stat_ansari_bradley(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic on the prefix counts.  The per-point group-1 share is
     fixed-point quantized (x1e6) before the sum, making the
     aggregate an exact BIGINT on both engines."""
-    e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(KS_G1, KS_G2)
-    )
-    grid = (
-        e.select(
-            "event_type",
-            F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v_cents"),
-        )
-        .groupBy("v_cents")
-        .agg(
-            F.count_if(F.col("event_type") == KS_G1).cast("long").alias("c1"),
-            F.count_if(F.col("event_type") == KS_G2).cast("long").alias("c2"),
-        )
-        .withColumn("c", F.col("c1") + F.col("c2")).localCheckpoint(eager=False)
-    )
-    cum = global_ordered(
-        grid,
-        [F.col("v_cents")],
-        bucket_key="v_cents",
-        sums={"c": "cumn"},
-        rank_col=None,
-    ).localCheckpoint(eager=False)
-    totals = grid.agg(
-        F.sum("c1").cast("long").alias("n1"),
-        F.sum("c2").cast("long").alias("n2"),
-        F.sum("c").cast("long").alias("nn"),
-        F.shiftright(F.sum("c").cast("long") + 1, 1).alias("m"),
-    )
+    nn = F.col("n1") + F.col("n2")
+    m = F.shiftright(nn + 1, 1)
 
     def t2(k):
-        return F.when(k <= F.col("m"), k * (k + 1)).otherwise(
-            F.col("m") * (F.col("m") + 1)
-            + (2 * F.col("nn") - F.col("m") - k + 1) * (k - F.col("m"))
+        return F.when(k <= m, k * (k + 1)).otherwise(
+            m * (m + 1) + (2 * nn - m - k + 1) * (k - m)
         )
 
-    s2 = t2(F.col("cumn")) - t2(F.col("cumn") - F.col("c1") - F.col("c2"))
+    cumn = F.col("cum1") + F.col("cum2")
+    s2 = t2(cumn) - t2(cumn - F.col("c1") - F.col("c2"))
     tq = F.floor(
         F.col("c1")
         * s2.cast("double")
@@ -6353,10 +6156,12 @@ def stat_ansari_bradley(spark: SparkSession, sf_dir: str) -> DataFrame:
         * _AB_Q
         + 0.5
     ).cast("long")
-    terms = cum.crossJoin(F.broadcast(totals)).agg(
-        F.sum(tq).cast("long").alias("abq")
+    terms = _ks_ecdf(spark, sf_dir).agg(
+        F.max("n1").alias("n1"),
+        F.max("n2").alias("n2"),
+        F.sum(tq).cast("long").alias("abq"),
     )
-    return terms.crossJoin(F.broadcast(totals)).select(
+    return terms.select(
         "n1",
         "n2",
         q4(F.col("abq").cast("double") / F.lit(_AB_Q)).alias("ab_stat"),
@@ -9479,32 +9284,13 @@ def stat_kuiper_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-sided max clamps at 0 (an everywhere-dominated ECDF has
     D+ = 0, the empty-max convention).
 
-    Scale shape: identical to stat_ks_test — one hash aggregate to
-    the bounded cents grid, ONE bucketed prefix pass
-    (operators/prefix.global_ordered), broadcast totals; no
-    unpartitioned window, no row-level sort."""
-    e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(KS_G1, KS_G2)
-    )
-    grid = e.select(
-        "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v_cents"),
-    ).groupBy("v_cents").agg(
-        F.count_if(F.col("event_type") == KS_G1).cast("long").alias("c1"),
-        F.count_if(F.col("event_type") == KS_G2).cast("long").alias("c2"),
-    ).localCheckpoint(eager=False)
-    cum = global_ordered(
-        grid,
-        [F.col("v_cents")],
-        bucket_key="v_cents",
-        sums={"c1": "cum1", "c2": "cum2"},
-        rank_col=None,
-    ).localCheckpoint(eager=False)
-    totals = grid.agg(
-        F.sum("c1").cast("long").alias("n1"),
-        F.sum("c2").cast("long").alias("n2"),
-    )
-    d = cum.crossJoin(F.broadcast(totals)).agg(
+    Scale shape: identical to stat_ks_test — one aggregate over the
+    shared ``_ks_ecdf`` frame (one hash aggregate to the bounded cents
+    grid, ONE bucketed prefix pass); no unpartitioned window, no
+    row-level sort."""
+    d = _ks_ecdf(spark, sf_dir).agg(
+        F.max("n1").alias("n1"),
+        F.max("n2").alias("n2"),
         F.max(F.col("cum1") * F.col("n2") - F.col("cum2") * F.col("n1"))
         .cast("long")
         .alias("dplus_num"),
@@ -9526,7 +9312,7 @@ def stat_kuiper_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n1").cast("double") * F.col("n2") / (F.col("n1") + F.col("n2"))
     )
     vstat = (dp + dm) * (sqrt_ne + 0.155 + 0.24 / sqrt_ne)
-    return d.crossJoin(F.broadcast(totals)).select(
+    return d.select(
         "n1",
         "n2",
         q4(dp).alias("d_plus"),
@@ -9611,46 +9397,23 @@ def stat_cucconi(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold is bounded by 4N³, inside 1e38 to N ~ 2.9e12 rows) and the
     closed form divides once per statistic.
 
-    Scale shape: one hash aggregate to the bounded cents grid, ONE
-    bucketed prefix pass for cumulative counts, broadcast totals —
-    the same census-allowlisted ECDF machine as stat_ks_test."""
-    e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(KS_G1, KS_G2)
-    )
-    grid = e.select(
-        "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v_cents"),
-    ).groupBy("v_cents").agg(
-        F.count_if(F.col("event_type") == KS_G1).cast("long").alias("c1"),
-        F.count_if(F.col("event_type") == KS_G2).cast("long").alias("c2"),
-    ).localCheckpoint(eager=False)
-    cn = (F.col("c1") + F.col("c2")).alias("cn")
-    cum = global_ordered(
-        grid.select("v_cents", "c1", "c2", cn),
-        [F.col("v_cents")],
-        bucket_key="v_cents",
-        sums={"cn": "cumn"},
-        rank_col=None,
-    ).localCheckpoint(eager=False)
-    totals = grid.agg(
-        F.sum("c1").cast("long").alias("n1"),
-        F.sum("c2").cast("long").alias("n2"),
-        F.sum(F.col("c1") + F.col("c2")).cast("long").alias("nn"),
-    )
+    Scale shape: one aggregate over the shared ``_ks_ecdf`` frame
+    (one hash aggregate to the bounded cents grid, ONE bucketed prefix
+    pass; cumn = cum1 + cum2) — the same census-allowlisted ECDF
+    machine as stat_ks_test."""
     dec = "decimal(38,0)"
-    two_m = (
-        2 * (F.col("cumn") - F.col("c1") - F.col("c2"))
-        + (F.col("c1") + F.col("c2"))
-        + 1
-    ).cast(dec)
-    two_m_contra = (2 * (F.col("nn") + 1)).cast(dec) - two_m
-    folds = cum.crossJoin(F.broadcast(totals)).agg(
+    c = F.col("c1") + F.col("c2")
+    two_m = (2 * (F.col("cum1") + F.col("cum2") - c) + c + 1).cast(dec)
+    two_m_contra = (2 * (F.col("n1") + F.col("n2") + 1)).cast(dec) - two_m
+    folds = _ks_ecdf(spark, sf_dir).agg(
+        F.max("n1").alias("n1"),
+        F.max("n2").alias("n2"),
         F.sum(F.col("c2").cast(dec) * two_m * two_m).alias("s1_4"),
         F.sum(F.col("c2").cast(dec) * two_m_contra * two_m_contra).alias(
             "s2_4"
         ),
     )
-    nn = F.col("nn").cast("double")
+    nn = (F.col("n1") + F.col("n2")).cast("double")
     denom = F.sqrt(
         F.col("n1").cast("double")
         * F.col("n2")
@@ -9669,7 +9432,7 @@ def stat_cucconi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) / denom
     rho = 2.0 * (nn * nn - 4) / ((2 * nn + 1) * (8.0 * nn + 11)) - 1.0
     c_stat = (u * u + v * v - 2 * rho * u * v) / (2 * (1 - rho * rho))
-    return folds.crossJoin(F.broadcast(totals)).select(
+    return folds.select(
         "n1",
         "n2",
         q4(u).alias("u"),
@@ -11785,33 +11548,14 @@ def stat_watson_u2(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulated in decimal(38,0)/HUGEINT (D ~ n1·n2 squares past
     int64 fast); one double expression at the end.
 
-    Scale shape: identical to stat_ks_test — one hash aggregate to
-    the cents grid, ONE bucketed prefix pass, broadcast totals."""
-    e = table(spark, sf_dir, "events").where(
-        F.col("event_type").isin(KS_G1, KS_G2)
-    )
-    grid = e.select(
-        "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("v_cents"),
-    ).groupBy("v_cents").agg(
-        F.count_if(F.col("event_type") == KS_G1).cast("long").alias("c1"),
-        F.count_if(F.col("event_type") == KS_G2).cast("long").alias("c2"),
-    ).localCheckpoint(eager=False)
-    cum = global_ordered(
-        grid,
-        [F.col("v_cents")],
-        bucket_key="v_cents",
-        sums={"c1": "cum1", "c2": "cum2"},
-        rank_col=None,
-    ).localCheckpoint(eager=False)
-    totals = grid.agg(
-        F.sum("c1").cast("long").alias("n1"),
-        F.sum("c2").cast("long").alias("n2"),
-    )
+    Scale shape: identical to stat_ks_test — one aggregate over the
+    shared ``_ks_ecdf`` frame."""
     dec = "decimal(38,0)"
     dnum = (F.col("cum1") * F.col("n2") - F.col("cum2") * F.col("n1")).cast(dec)
     t = (F.col("c1") + F.col("c2")).cast(dec)
-    folds = cum.crossJoin(F.broadcast(totals)).agg(
+    folds = _ks_ecdf(spark, sf_dir).agg(
+        F.max("n1").alias("n1"),
+        F.max("n2").alias("n2"),
         F.sum(t * dnum * dnum).alias("std2"),
         F.sum(t * dnum).alias("std1"),
     )
@@ -11820,7 +11564,7 @@ def stat_watson_u2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("std2").cast("double")
         - F.col("std1").cast("double") * F.col("std1").cast("double") / nn
     ) / (F.col("n1").cast("double") * F.col("n2") * nn * nn)
-    return folds.crossJoin(F.broadcast(totals)).select(
+    return folds.select(
         "n1",
         "n2",
         q4(u2).alias("u2_stat"),

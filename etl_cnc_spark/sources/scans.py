@@ -116,12 +116,14 @@ def scan_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface NULL for the new column."""
     n = table(spark, sf_dir, "nation")
     out = tmpdir(prefix="etlcnc_merge_", stable=True, key=sf_dir)
-    n.where(F.col("n_nationkey") < 10).select("n_nationkey", "n_name").write.parquet(
-        f"{out}/v1"
-    )
+    # overwrite: the stable staging dir is reused by every rebuild in
+    # the session (a plain write fails with PATH_ALREADY_EXISTS)
+    n.where(F.col("n_nationkey") < 10).select("n_nationkey", "n_name").write.mode(
+        "overwrite"
+    ).parquet(f"{out}/v1")
     n.where(F.col("n_nationkey") >= 10).select(
         "n_nationkey", "n_name", F.col("n_regionkey").cast("long").alias("n_regionkey")
-    ).write.parquet(f"{out}/v2")
+    ).write.mode("overwrite").parquet(f"{out}/v2")
     return (
         spark.read.option("mergeSchema", "true")
         .parquet(f"{out}/v1", f"{out}/v2")

@@ -362,8 +362,12 @@ def test_value_grid_folds_have_no_unpartitioned_window(spark, sf_dir):
     windowspecdefinition in their plans is partitioned (by _pid or a
     real key) — no "WindowExec: No Partition Defined" over the
     data-proportional cents grid survives (VERDICT r5 #4). events_rfm
-    is covered by the same assertion (its ranks share the machine)."""
-    for key in ("stat_ks_test", "stat_mann_whitney", "events_rfm"):
+    is covered by the same assertion (its ranks share the machine), and
+    so is every ECDF test built on ``prefix.two_sample_ecdf`` (its
+    ``lead`` for the next grid value included)."""
+    from tests.test_ecdf_grid import ECDF_KEYS
+
+    for key in ("events_rfm", *ECDF_KEYS):
         df = REGISTRY[key].build(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         for line in plan.splitlines():

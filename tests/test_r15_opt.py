@@ -6,7 +6,7 @@ so a regression is caught by shape, not by timing noise.
 
 from __future__ import annotations
 
-from tests.test_plans import node_count, plan_of
+from tests.test_plans import REGISTRY, node_count, plan_of
 
 
 def test_q21_single_fact_pass(spark, sf_dir):
@@ -136,14 +136,32 @@ def test_minhash_estimate_single_join(spark, sf_dir):
     assert joins == 1, plan
 
 
-def test_wasserstein_cached_grid_single_scan(spark, sf_dir):
-    """r15: the cents grid and the cumulative frame are persist()ed
-    (not lazily checkpointed) — consumers share one computation
-    without the RDD materialization barrier, and the single events
-    scan stays visible to plan audits."""
+def test_wasserstein_single_pass_ecdf_grid(spark, sf_dir):
+    """The cents grid and its cumulative frame are no longer cached:
+    ``prefix.two_sample_ecdf`` gives every frame one consumer, so the
+    plan has no InMemoryRelation, no rank+1 self-join (the next grid
+    value is a ``lead`` inside the ``_pid`` window), and a fixed set of
+    exchanges: the grid, min/max, ``_pid`` and final shuffles and the
+    min/max and offsets broadcasts, the repeated ones planned once per
+    consumer for AQE to reuse."""
     plan = plan_of("stat_wasserstein_1d", spark, sf_dir)
-    assert node_count(plan, "Scan parquet") == 1, plan
-    assert "InMemoryRelation" in plan, plan
+    assert "InMemoryRelation" not in plan, plan
+    assert node_count(plan, "SortMergeJoin") == 0, plan
+    assert node_count(plan, "ShuffledHashJoin") == 0, plan
+    # before execution: the grid, min/max and _pid exchanges once per
+    # consumer of the bucketed window (×2 each), the offsets fold and
+    # the final aggregate; min/max ×2 and offsets broadcasts
+    assert node_count(plan, "Exchange") == 8, plan
+    assert node_count(plan, "BroadcastExchange") == 3, plan
+    # executed: AQE runs the repeated _pid exchange, with everything
+    # under it, once; the two scans are the grid's and the min/max
+    # pass's, which run concurrently
+    df = REGISTRY["stat_wasserstein_1d"].build(spark, sf_dir)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    final = final.split("Initial Plan")[0]
+    assert final.count("ReusedExchange") == 1, final
+    assert final.count("Scan parquet") == 2, final
 
 
 def test_cluster_edges_symmetrize_without_union(spark, sf_dir):
