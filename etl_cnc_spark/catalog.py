@@ -61,8 +61,14 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``unix_micros`` math matches DuckDB's ``epoch_us`` of the same file.
 
     r16: the returned DataFrame is MEMOIZED per (session, sf_dir,
-    name) — a lazy PLAN handle, never data (every action still reads
-    the parquet files fresh; nothing materialized survives a rebuild).
+    name) — a lazy plan handle, never row data: every action re-reads
+    the contents of the files, and nothing materialized survives a
+    rebuild.  The handle does freeze the file LISTING (paths and
+    sizes) and the resolved SCHEMA at first read, so files added,
+    removed or rewritten under ``{sf_dir}/{name}.parquet`` within one
+    session are missed or fail the read; a process that rewrites
+    fixture tables must use a new session.
+
     ``spark.read.parquet`` costs a driver-side footer read + schema
     resolution on every call, and the bench keys reference 1–4 tables
     per build, so the uncached path re-paid ~20–50 ms of pure

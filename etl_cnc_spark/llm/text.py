@@ -2240,7 +2240,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = global_ordered(
         freq,
         [F.col("f").desc(), F.col("w")],
-        bucket_key=F.col("f"),
+        bucket_key="f",
         bucket_desc=True,
         rank_col="rk",
     )

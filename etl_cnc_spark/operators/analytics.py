@@ -406,7 +406,7 @@ def events_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     running = global_ordered(
         bounds,
         [F.col("t"), F.col("delta"), F.col("event_id")],
-        bucket_key=F.unix_micros(F.col("t").cast("timestamp")),
+        bucket_key="unix_micros(CAST(t AS TIMESTAMP))",
         sums={"delta": "concurrent"},
         rank_col=None,
     )
@@ -8242,8 +8242,9 @@ def events_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     still active within 2 days of the corpus end are censored).
 
     Scale shape: one per-user rollup, one bounded lifetime-day grid,
-    at-risk counts from ONE prefix pass, per-time O-E and variance
-    terms x1e9-quantized so both folds are exact BIGINTs."""
+    at-risk counts and group totals from ONE unpartitioned window over
+    that calendar-bounded grid, per-time O-E and variance terms
+    x1e9-quantized so both folds are exact BIGINTs."""
     e = table(spark, sf_dir, "events")
     per_user = e.groupBy("user_id").agg(
         F.datediff(F.max("ts").cast("date"), F.min("ts").cast("date"))
@@ -8265,23 +8266,26 @@ def events_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count_if(F.col("dead") & (F.col("grp") == 0)).cast("long").alias("d0"),
         F.count_if(F.col("grp") == 1).cast("long").alias("a1"),
         F.count_if(F.col("grp") == 0).cast("long").alias("a0"),
-    ).localCheckpoint(eager=False)
-    tot = grid.agg(
-        F.sum("a1").cast("long").alias("nu1"),
-        F.sum("a0").cast("long").alias("nu0"),
     )
-    cum = global_ordered(
-        grid,
-        [F.col("t")],
-        bucket_key="t",
-        sums={"a1": "ca1", "a0": "ca0"},
-        rank_col=None,
-    ).localCheckpoint(eager=False)
-    risk = cum.crossJoin(F.broadcast(tot)).select(
+    # calendar-bounded lifetime-day grid (census-allowlisted)
+    w = Window.orderBy("t")
+    w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    w_all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    # group g's total, and its at-risk count: the total minus the
+    # users who left strictly before t
+    risk = grid.select(
         "d1",
         "d0",
-        (F.col("nu1") - (F.col("ca1") - F.col("a1"))).alias("n1"),
-        (F.col("nu0") - (F.col("ca0") - F.col("a0"))).alias("n0"),
+        *[F.sum(f"a{g}").over(w_all).cast("long").alias(f"nu{g}") for g in (1, 0)],
+        *[
+            (
+                F.sum(f"a{g}").over(w_all)
+                - (F.sum(f"a{g}").over(w_run) - F.col(f"a{g}"))
+            )
+            .cast("long")
+            .alias(f"n{g}")
+            for g in (1, 0)
+        ],
     )
     n = F.col("n1") + F.col("n0")
     d = F.col("d1") + F.col("d0")
@@ -8302,21 +8306,25 @@ def events_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             + 0.5
         ).cast("long"),
     ).otherwise(0)
-    terms = risk.where((d > 0) & (F.col("n1") > 0) & (F.col("n0") > 0)).select(
-        oe_q.alias("oe_q"), v_q.alias("v_q")
-    )
-    # coalesce(0): the terms frame can be EMPTY (a degenerate corpus
-    # with no informative stratum — e.g. every user in one group), so
-    # the sums must not come back NULL, and chi2 guards v = 0.
-    s = terms.agg(
-        F.coalesce(F.sum("oe_q"), F.lit(0)).cast("long").alias("oe"),
-        F.coalesce(F.sum("v_q"), F.lit(0)).cast("long").alias("v"),
+    informative = (d > 0) & (F.col("n1") > 0) & (F.col("n0") > 0)
+    # coalesce(0): no stratum may be informative (a degenerate corpus
+    # — e.g. every user in one group), so the sums must not come back
+    # NULL, and chi2 guards v = 0.
+    s = risk.agg(
+        F.max("nu1").alias("nu1"),
+        F.max("nu0").alias("nu0"),
+        *[
+            F.coalesce(F.sum(F.when(informative, q)), F.lit(0))
+            .cast("long")
+            .alias(c)
+            for c, q in (("oe", oe_q), ("v", v_q))
+        ],
     )
     chi2_raw = F.pow(F.col("oe").cast("double") / _LR_Q, 2) / (
         F.col("v").cast("double") / _LR_Q
     )
     chi2 = F.when(F.col("v") == 0, F.lit(0.0)).otherwise(chi2_raw)
-    return s.crossJoin(F.broadcast(tot)).select(
+    return s.select(
         F.col("nu1").alias("n_users_purchasers"),
         F.col("nu0").alias("n_users_other"),
         q4(chi2).alias("chi2"),
@@ -9444,7 +9452,7 @@ def events_transfer_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         _go(
             daily,
             [F.col("day")],
-            bucket_key=F.datediff(F.col("day"), F.lit("1970-01-01")),
+            bucket_key="datediff(day, '1970-01-01')",
             rank_col="t",
         )
         .crossJoin(F.broadcast(medx))
@@ -9622,7 +9630,7 @@ def events_hmm_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
         _go(
             daily,
             [F.col("day")],
-            bucket_key=F.datediff(F.col("day"), F.lit("1970-01-01")),
+            bucket_key="datediff(day, '1970-01-01')",
             rank_col="t",
         )
         .crossJoin(F.broadcast(med))
@@ -10073,7 +10081,7 @@ def events_reliability_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = _go(
         daily,
         [F.col("day")],
-        bucket_key=F.datediff(F.col("day"), F.lit("1970-01-01")),
+        bucket_key="datediff(day, '1970-01-01')",
         sums={"errs": "cum"},
         rank_col="t",
     )

@@ -2228,7 +2228,7 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum = global_ordered(
         calgrid,
         [F.col("r")],
-        bucket_key=F.expr("r DIV 65536"),
+        bucket_key="r DIV 65536",
         sums={"t": "c"},
         rank_col=None,
     )
@@ -2699,7 +2699,7 @@ def ml_kendall_w(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = global_ordered(
         melted,
         [F.col("rk_id"), F.col("s"), F.col("doc_id")],
-        bucket_key=F.col("rk_id").cast("long") * _KW_C + F.col("s"),
+        bucket_key=f"CAST(rk_id AS BIGINT) * {_KW_C} + s",
         rank_col="grk",
     )
     tot = feat.agg(F.count(F.lit(1)).cast("long").alias("n"))

@@ -158,7 +158,7 @@ def _exclusive_offsets(
 
 def _with_bucket_id(
     df: DataFrame,
-    bucket_key: Column | str,
+    bucket_key: str,
     num_parts: int,
     *,
     bucket_desc: bool = False,
@@ -168,55 +168,35 @@ def _with_bucket_id(
     key value: a pure function of (key, lo, hi, num_parts) — identical
     in every plan branch.  width = ceil(span / num_parts) ≥ 1, so
     _pid ∈ [0, num_parts-1].  Without static ``bounds`` (lo, hi) is
-    one global min/max aggregate, broadcast."""
-    key = (
-        F.col(bucket_key) if isinstance(bucket_key, str) else bucket_key
-    ).cast("long")
-    # r16: a STRING bucket_key (the common case — ~40 of the ~50 call
-    # sites) takes a single-select path with the bucket id as one SQL
-    # expression; the old shape added two withColumns, and every
-    # DataFrame op here re-analyzes the caller's whole lineage (pure
-    # driver latency at any scale — guide §7.3 "query planning").
-    # The SQL string computes the IDENTICAL integer arithmetic on the
-    # same casts, so _pid is bit-equal; a Column bucket_key keeps the
-    # two-step shape (a Column can't be inlined into a SQL string).
-    key_sql = (
-        f"CAST(`{bucket_key}` AS BIGINT)"
-        if isinstance(bucket_key, str)
-        else None
-    )
+    one global min/max aggregate, broadcast.
+
+    ``bucket_key`` is a Spark SQL expression over ``df``'s columns (a
+    bare column name is the common case); the bucket id is ONE SQL
+    expression in a single select — every DataFrame op here
+    re-analyzes the caller's whole lineage, which is pure driver
+    latency at any scale (r16)."""
+    key_sql = f"CAST(({bucket_key}) AS BIGINT)"
     if bounds is not None:
         lo, hi = int(bounds[0]), int(bounds[1])
         width = (hi - lo + num_parts) // num_parts
-        if key_sql is not None:
-            pos_sql = (
-                f"CAST(({hi}L - {key_sql}) AS BIGINT)"
-                if bucket_desc
-                else f"CAST(({key_sql} - {lo}L) AS BIGINT)"
-            )
-            return df.select(
-                "*", F.expr(f"{pos_sql} DIV {width}").alias("_pid")
-            )
-        pos = (F.lit(hi) - key) if bucket_desc else (key - F.lit(lo))
-        return df.withColumn("_pos", pos.cast("long")).withColumn(
-            "_pid", F.expr(f"_pos DIV {width}")
-        )
-    mm = df.agg(F.min(key).alias("_lo"), F.max(key).alias("_hi"))
-    wid_sql = f"((_hi - _lo + {num_parts}) DIV {num_parts})"
-    if key_sql is not None:
         pos_sql = (
-            f"CAST((_hi - {key_sql}) AS BIGINT)"
+            f"CAST(({hi}L - {key_sql}) AS BIGINT)"
             if bucket_desc
-            else f"CAST(({key_sql} - _lo) AS BIGINT)"
+            else f"CAST(({key_sql} - {lo}L) AS BIGINT)"
         )
-        return df.crossJoin(F.broadcast(mm)).select(
-            "*", F.expr(f"{pos_sql} DIV {wid_sql}").alias("_pid")
-        )
-    pos = (F.col("_hi") - key) if bucket_desc else (key - F.col("_lo"))
-    return (
-        df.crossJoin(F.broadcast(mm))
-        .withColumn("_pos", pos.cast("long"))
-        .withColumn("_pid", F.expr(f"_pos DIV {wid_sql}"))
+        return df.select("*", F.expr(f"{pos_sql} DIV {width}").alias("_pid"))
+    mm = df.agg(
+        F.expr(f"min({key_sql})").alias("_lo"),
+        F.expr(f"max({key_sql})").alias("_hi"),
+    )
+    wid_sql = f"((_hi - _lo + {num_parts}) DIV {num_parts})"
+    pos_sql = (
+        f"CAST((_hi - {key_sql}) AS BIGINT)"
+        if bucket_desc
+        else f"CAST(({key_sql} - _lo) AS BIGINT)"
+    )
+    return df.crossJoin(F.broadcast(mm)).select(
+        "*", F.expr(f"{pos_sql} DIV {wid_sql}").alias("_pid")
     )
 
 
@@ -228,7 +208,7 @@ def global_ordered(
     df: DataFrame,
     order_cols: list[Column],
     *,
-    bucket_key: Column | str,
+    bucket_key: str,
     bucket_desc: bool = False,
     sums: dict[str, str] | None = None,
     rank_col: str | None = "rk",
@@ -241,8 +221,9 @@ def global_ordered(
     with bucketed prefix sums (see module docstring), never a
     single-partition window.
 
-    ``bucket_key`` must be an integral-valued expression monotone in
-    the LEADING sort column (pass ``bucket_desc=True`` when that
+    ``bucket_key`` must be an integral-valued Spark SQL expression
+    string (e.g. ``"v_cents"``, ``"r DIV 65536"``) monotone in the
+    LEADING sort column (pass ``bucket_desc=True`` when that
     column sorts descending); rows with equal leading keys land in
     the same bucket, so secondary tie-break columns never cross a
     bucket boundary.  ``order_cols`` must be a total order (tie-break

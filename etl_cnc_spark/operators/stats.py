@@ -6756,67 +6756,53 @@ def stat_kpss(spark: SparkSession, sf_dir: str) -> DataFrame:
     only in the final ratio.
 
     Scale shape: events hash-aggregate to the calendar-bounded hourly
-    grid; ONE prefix pass gives rank and cumulative sum; the lag
-    autocovariances are a 7-offset equi-join on the grid rank — all
-    grid-sized."""
+    grid (~720 rows per 30-day month at any SF); ONE unpartitioned
+    window over it gives the rank, the running sum, the grand totals
+    and the lags 1-6, and a single fold reads all seven
+    autocovariances from those lag columns — no self-join."""
     e = table(spark, sf_dir, "events")
     hourly = e.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
         F.count(F.lit(1)).cast("long").alias("y")
-    ).localCheckpoint(eager=False)
-    ranked = global_ordered(
-        hourly,
-        [F.col("h")],
-        bucket_key=F.unix_micros(F.col("h")),
-        sums={"y": "cum_y"},
-        rank_col="t",
-    ).select("y", "t", "cum_y").localCheckpoint(eager=False)
-    tot = hourly.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("y").cast("long").alias("sy"),
     )
-    sp = (F.col("n") * F.col("cum_y") - F.col("t") * F.col("sy"))
-    s2 = ranked.crossJoin(F.broadcast(tot)).agg(
-        F.sum(sp * sp).cast("long").alias("ss_q")
+    # calendar-bounded hour grid (census-allowlisted)
+    w = Window.orderBy("h")
+    w_all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    ranked = hourly.select(
+        "y",
+        F.row_number().over(w).cast("long").alias("t"),
+        F.sum("y")
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        .cast("long")
+        .alias("cum_y"),
+        F.count(F.lit(1)).over(w_all).cast("long").alias("n"),
+        F.sum("y").over(w_all).cast("long").alias("sy"),
+        *[F.lag("y", l).over(w).alias(f"y{l}") for l in range(1, _KPSS_L + 1)],
     )
-    lags = F.explode(F.array(*[F.lit(i) for i in range(_KPSS_L + 1)])).alias("l")
-    a = ranked.select(F.col("y").alias("ya"), F.col("t").alias("ta")).select(
-        "ya", "ta", lags
-    )
-    b = ranked.select(F.col("y").alias("yb"), F.col("t").alias("tb"))
-    gammas = (
-        a.join(b, F.col("tb") == F.col("ta") - F.col("l"))
-        .crossJoin(F.broadcast(tot))
-        .groupBy("l")
-        .agg(
-            F.sum(
-                (F.col("n") * F.col("ya") - F.col("sy"))
-                * (F.col("n") * F.col("yb") - F.col("sy"))
-            )
+    sp = F.col("n") * F.col("cum_y") - F.col("t") * F.col("sy")
+    za = F.col("n") * F.col("y") - F.col("sy")
+    folds = ranked.agg(
+        F.max("n").alias("n"),
+        F.sum(sp * sp).cast("long").alias("ss_q"),
+        F.sum(za * za).cast("long").alias("g0"),
+        *[
+            F.sum(za * (F.col("n") * F.col(f"y{l}") - F.col("sy")))
             .cast("long")
-            .alias("g_q")
-        )
+            .alias(f"g{l}")
+            for l in range(1, _KPSS_L + 1)
+        ],
     )
-    w_l = F.when(F.col("l") == 0, F.lit(1.0)).otherwise(
-        F.lit(2.0) * (F.lit(1.0) - F.col("l").cast("double") / (_KPSS_L + 1))
-    )
-    lrv = gammas.crossJoin(F.broadcast(tot)).groupBy("n").agg(
-        (
-            F.sum(w_l * F.col("g_q")).cast("double")
-            / (F.col("n").cast("double") * F.col("n") * F.col("n"))
-        ).alias("s2_lr")
-    )
+    lrv_q = F.col("g0").cast("double")
+    for l in range(1, _KPSS_L + 1):
+        lrv_q = lrv_q + 2.0 * (1.0 - l / (_KPSS_L + 1)) * F.col(f"g{l}")
     nd = F.col("n").cast("double")
+    s2_lr = lrv_q / (nd * F.col("n") * F.col("n"))
     eta_raw = (
         F.col("ss_q").cast("double") / (nd * F.col("n")) / (nd * F.col("n"))
-    ) / F.col("s2_lr")
-    return (
-        s2.crossJoin(F.broadcast(lrv))
-        .select(F.col("n").alias("n_hours"), eta_raw.alias("eta_raw"))
-        .select(
-            "n_hours",
-            q4(F.col("eta_raw")).alias("kpss_eta"),
-            (F.col("eta_raw") > _KPSS_CRIT).alias("nonstationary"),
-        )
+    ) / s2_lr
+    return folds.select(
+        F.col("n").alias("n_hours"),
+        q4(eta_raw).alias("kpss_eta"),
+        (eta_raw > _KPSS_CRIT).alias("nonstationary"),
     )
 
 
@@ -6863,24 +6849,19 @@ def stat_adf(spark: SparkSession, sf_dir: str) -> DataFrame:
     rejects the unit root (series mean-reverts) — KPSS's complement,
     with the hypotheses reversed.
 
-    Scale shape: the same calendar-bounded hourly grid; the lag pair
-    is a rank+1 self-join on the grid; all regression moments are
-    exact BIGINTs and the t-statistic is closed-form in them (SSR via
-    the centered-moment identity — no residual pass)."""
+    Scale shape: the same calendar-bounded hourly grid; the lagged
+    level is ``lag(y)`` in one unpartitioned window over it; all
+    regression moments are exact BIGINTs and the t-statistic is
+    closed-form in them (SSR via the centered-moment identity — no
+    residual pass)."""
     e = table(spark, sf_dir, "events")
     hourly = e.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
         F.count(F.lit(1)).cast("long").alias("y")
-    ).localCheckpoint(eager=False)
-    ranked = global_ordered(
-        hourly,
-        [F.col("h")],
-        bucket_key=F.unix_micros(F.col("h")),
-        rank_col="t",
-    ).select("y", "t").localCheckpoint(eager=False)
-    a = ranked.select(F.col("y").alias("ya"), F.col("t").alias("ta"))
-    b = ranked.select(F.col("y").alias("yb"), F.col("t").alias("tb"))
-    pairs = a.join(b, F.col("tb") == F.col("ta") - 1).select(
-        (F.col("ya") - F.col("yb")).alias("dy"), F.col("yb").alias("x")
+    )
+    # calendar-bounded hour grid (census-allowlisted)
+    x = F.lag("y").over(Window.orderBy("h"))
+    pairs = hourly.select((F.col("y") - x).alias("dy"), x.alias("x")).where(
+        F.col("x").isNotNull()
     )
     m = pairs.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -9885,45 +9866,42 @@ def stat_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass is needed and both engines evaluate one fixed double
     expression per lag.
 
-    Scale shape: one hash aggregate to days, a 15-lag × day-grid
-    equi-join on the rank index (grid-sized, never the fact table),
-    one 1-row moments frame broadcast to all lags."""
+    Scale shape: one hash aggregate to days; one unpartitioned window
+    over that calendar-bounded grid carries the full-series moments
+    and y shifted by every lag (``lead(y, k)``); exploding the 15
+    shifted values gives |days|×15 rows, grouped by lag — no join."""
     e = table(spark, sf_dir, "events")
-    # calendar-day grid: bounded, consumed 3x inside global_ordered —
-    # lazy checkpoint (this key replayed the events scan 12x pre-r13)
     daily = e.groupBy(F.to_date("ts").alias("day")).agg(
         F.count_if(F.col("event_type") == KS_G1).cast("long").alias("x"),
         F.count_if(F.col("event_type") == KS_G2).cast("long").alias("y"),
-    ).localCheckpoint(eager=False)
-    # ranked grid feeds the moments row and BOTH lag-join sides
-    ranked = global_ordered(
-        daily,
-        [F.col("day")],
-        bucket_key=F.datediff(F.col("day"), F.lit("1970-01-01")),
-        rank_col="t",
-    ).select("x", "y", "t").localCheckpoint(eager=False)
-    m = ranked.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
     )
-    lags = spark.range(-_CCF_MAX_LAG, _CCF_MAX_LAG + 1).select(
-        F.col("id").cast("long").alias("lag")
+    # calendar-bounded day grid (census-allowlisted)
+    w = Window.orderBy("day")
+    w_all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    lags = range(-_CCF_MAX_LAG, _CCF_MAX_LAG + 1)
+    ranked = daily.select(
+        "x",
+        F.count(F.lit(1)).over(w_all).cast("long").alias("n"),
+        F.sum("x").over(w_all).cast("long").alias("sx"),
+        F.sum("y").over(w_all).cast("long").alias("sy"),
+        F.sum(F.col("x") * F.col("x")).over(w_all).cast("long").alias("sxx"),
+        F.sum(F.col("y") * F.col("y")).over(w_all).cast("long").alias("syy"),
+        # y_(t+k) for k = -7..7: the partner of x_t at lag k
+        F.array(
+            *[F.col("y") if k == 0 else F.lead("y", k).over(w) for k in lags]
+        ).alias("ys"),
     )
-    a = ranked.select(
-        F.col("x").alias("xa"), F.col("t").alias("ta")
-    ).crossJoin(F.broadcast(lags))
-    b = ranked.select(F.col("y").alias("yb"), F.col("t").alias("tb"))
+    moments = ("n", "sx", "sy", "sxx", "syy")
     ct = (
-        a.join(b, F.col("tb") == F.col("ta") + F.col("lag"))
-        .groupBy("lag")
+        ranked.select("x", *moments, F.posexplode("ys").alias("pos", "yb"))
+        .where(F.col("yb").isNotNull())
+        .groupBy((F.col("pos") - _CCF_MAX_LAG).cast("long").alias("lag"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_ov"),
-            F.sum(F.col("xa") * F.col("yb")).cast("long").alias("sxy"),
-            F.sum("xa").cast("long").alias("sx_ov"),
+            F.sum(F.col("x") * F.col("yb")).cast("long").alias("sxy"),
+            F.sum("x").cast("long").alias("sx_ov"),
             F.sum("yb").cast("long").alias("sy_ov"),
+            *[F.max(c).alias(c) for c in moments],
         )
     )
     n = F.col("n").cast("double")
@@ -9939,11 +9917,7 @@ def stat_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
         * (F.col("syy").cast("double") - F.col("sy").cast("double") * F.col("sy") / n)
         / n
     )
-    return ct.crossJoin(F.broadcast(m)).select(
-        "lag",
-        "n_ov",
-        q4(num / n / den).alias("ccf"),
-    )
+    return ct.select("lag", "n_ov", q4(num / n / den).alias("ccf"))
 
 
 @register(
@@ -10039,6 +10013,12 @@ def stat_lin_ccc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Bartlett lag floor(4·(T/100)^(2/9)) stays <= 16 below T = 67,500
+# days (~185 years of daily grid); the TPC-H order calendar (~2400
+# days) gives 8.
+_NW_MAX_LAG = 16
+
+
 @register(
     "stat_newey_west",
     oracle=f"""
@@ -10120,83 +10100,77 @@ def stat_newey_west(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines.
 
     Scale shape: the fact table collapses to the calendar-bounded
-    day grid in one hash aggregate; the lag structure is a banded
-    self-join ON THE GRID (|days|·(L+1) pairs — metadata-sized at
-    any SF); the window in global_ordered is the allowlisted
-    day-grid rank."""
+    day grid in one hash aggregate; one unpartitioned window over that
+    grid gives the day rank and y at lags 1.._NW_MAX_LAG, a whole-grid
+    window the regression moments, and the residual products u_t,
+    u_(t-l) are exploded per lag (|days|·(L+1) rows) into ONE fold —
+    no self-join."""
     o = table(spark, sf_dir, "orders")
     dec = "decimal(38,0)"
     daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
         F.sum(cents(F.col("o_totalprice"))).cast("long").alias("y")
-    ).localCheckpoint(eager=False)
-    ranked = global_ordered(
-        daily,
-        [F.col("day")],
-        bucket_key=F.datediff(F.col("day"), F.lit("1970-01-01")),
-        rank_col="t",
-    ).select("y", "t").localCheckpoint(eager=False)
-    m = ranked.agg(
-        F.count(F.lit(1)).cast("long").alias("nd"),
-        F.sum("t").cast("long").alias("st"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("t") * F.col("t")).cast("long").alias("stt"),
-        F.sum(F.col("t") * F.col("y")).cast("long").alias("sty"),
+    )
+    # calendar-bounded day grid (census-allowlisted)
+    w = Window.orderBy("day")
+    ranked = daily.select(
+        "y",
+        F.row_number().over(w).cast("long").alias("t"),
+        *[F.lag("y", l).over(w).alias(f"y{l}") for l in range(1, _NW_MAX_LAG + 1)],
+    )
+    w_all = Window.partitionBy()
+    tc = F.col("t")
+    m = ranked.select(
+        "*",
+        F.count(F.lit(1)).over(w_all).cast("long").alias("nd"),
+        F.sum("t").over(w_all).cast("long").alias("st"),
+        F.sum("y").over(w_all).cast("long").alias("sy"),
+        F.sum(tc * tc).over(w_all).cast("long").alias("stt"),
+        F.sum(tc * F.col("y")).over(w_all).cast("long").alias("sty"),
     )
     ndd = F.col("nd").cast("double")
     b = (ndd * F.col("sty") - F.col("st").cast("double") * F.col("sy")) / (
         ndd * F.col("stt") - F.col("st").cast("double") * F.col("st")
     )
     fit = m.select(
-        "nd",
-        "st",
-        "stt",
+        "*",
         F.floor(4 * F.pow(ndd / 100, F.lit(2.0) / 9.0)).cast("long").alias("lw"),
         b.alias("b"),
         ((F.col("sy").cast("double") - b * F.col("st")) / ndd).alias("a"),
     )
-    resid = ranked.crossJoin(F.broadcast(fit)).select(
-        "t",
-        (F.col("nd") * F.col("t") - F.col("st")).alias("xc"),
-        F.floor(F.col("y") - F.col("a") - F.col("b") * F.col("t") + 0.5)
-        .cast("long")
-        .alias("eq"),
+
+    def eq(l: int) -> Column:  # residual of day t - l, floored to cents
+        y, t = F.col(f"y{l}" if l else "y"), tc - l
+        return F.floor(y - F.col("a") - F.col("b") * t + 0.5).cast("long")
+
+    def u(l: int) -> Column:  # centered regressor × residual of day t - l
+        return ((F.col("nd") * (tc - l) - F.col("st")) * eq(l)).cast(dec)
+
+    xe = fit.select(
         "nd",
         "st",
         "stt",
         "lw",
         "b",
+        eq(0).cast(dec).alias("eqh"),
+        u(0).alias("u"),
+        F.posexplode(F.array(*[u(l) for l in range(_NW_MAX_LAG + 1)])).alias(
+            "l", "ul"
+        ),
+    ).where(F.col("ul").isNotNull() & (F.col("l") <= F.col("lw")))
+    folds = xe.agg(
+        *[F.max(c).alias(c) for c in ("nd", "st", "stt", "lw", "b")],
+        F.sum(
+            F.when(
+                F.col("l") == 0,
+                (F.col("lw") + 1).cast(dec) * F.col("u") * F.col("ul"),
+            ).otherwise(
+                (2 * (F.col("lw") + 1 - F.col("l"))).cast(dec)
+                * F.col("u")
+                * F.col("ul")
+            )
+        ).alias("s_fold"),
+        F.sum(F.when(F.col("l") == 0, F.col("eqh") * F.col("eqh"))).alias("see"),
     )
-    xe = resid.select(
-        "t",
-        (F.col("xc") * F.col("eq")).cast(dec).alias("u"),
-        F.col("eq").cast(dec).alias("eqh"),
-        "nd",
-        "st",
-        "stt",
-        "lw",
-        "b",
-    )
-    a_ = xe.select(
-        F.col("t").alias("ta"), F.col("u").alias("ua"), F.col("lw").alias("lwa")
-    )
-    b_ = xe.select(F.col("t").alias("tb"), F.col("u").alias("ub"))
-    lag_l = F.col("ta") - F.col("tb")
-    meat = (
-        a_.join(b_, (lag_l >= 0) & (lag_l <= F.col("lwa")))
-        .agg(
-            F.sum(
-                F.when(
-                    lag_l == 0,
-                    (F.col("lwa") + 1).cast(dec) * F.col("ua") * F.col("ub"),
-                ).otherwise(
-                    (2 * (F.col("lwa") + 1 - lag_l)).cast(dec)
-                    * F.col("ua")
-                    * F.col("ub")
-                )
-            ).alias("s_fold")
-        )
-    )
-    ssr = xe.agg(F.sum(F.col("eqh") * F.col("eqh")).alias("see"))
     sxx_c = F.col("stt") - F.col("st").cast("double") * F.col("st") / F.col("nd")
     s_meat = (
         F.col("s_fold").cast("double")
@@ -10204,17 +10178,17 @@ def stat_newey_west(spark: SparkSession, sf_dir: str) -> DataFrame:
         / (F.col("nd").cast("double") * F.col("nd"))
     )
     s2 = F.col("see").cast("double") / (F.col("nd") - 2)
-    return (
-        fit.crossJoin(F.broadcast(meat))
-        .crossJoin(F.broadcast(ssr))
-        .select(
-            F.col("nd").alias("n_days"),
-            F.col("lw").alias("nw_lag"),
-            q4(F.col("b") / 100.0).alias("slope_dollars"),
-            q4(F.sqrt(s2 / sxx_c) / 100.0).alias("se_ols"),
-            q4(F.sqrt(s_meat / (sxx_c * sxx_c)) / 100.0).alias("se_hac"),
-            q4(F.col("b") / F.sqrt(s_meat / (sxx_c * sxx_c))).alias("t_hac"),
-        )
+    return folds.select(
+        F.col("nd").alias("n_days"),
+        # the lag columns stop at _NW_MAX_LAG: a longer Bartlett lag
+        # must fail loudly, never fold a truncated kernel
+        F.when(F.col("lw") <= _NW_MAX_LAG, F.col("lw"))
+        .otherwise(F.raise_error(F.lit(f"Newey-West lag > {_NW_MAX_LAG}")))
+        .alias("nw_lag"),
+        q4(F.col("b") / 100.0).alias("slope_dollars"),
+        q4(F.sqrt(s2 / sxx_c) / 100.0).alias("se_ols"),
+        q4(F.sqrt(s_meat / (sxx_c * sxx_c)) / 100.0).alias("se_hac"),
+        q4(F.col("b") / F.sqrt(s_meat / (sxx_c * sxx_c))).alias("t_hac"),
     )
 
 
@@ -10307,43 +10281,47 @@ def stat_white_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines; R² comes from the SSReg = c·g - T·ȳ² identity, so
     there is no second residual pass.
 
-    Scale shape: one hash aggregate to the day grid, a broadcast
-    1-row fit frame, one grid-sized fold; the only window is the
-    allowlisted day-grid rank."""
+    Scale shape: one hash aggregate to the calendar-bounded day grid;
+    one unpartitioned window over it ranks the days, a whole-grid
+    window carries the OLS moments to every row, and one grid-sized
+    fold builds the auxiliary normal equations."""
     o = table(spark, sf_dir, "orders")
     dec = "decimal(38,0)"
     daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
         F.count(F.lit(1)).cast("long").alias("y")
-    ).localCheckpoint(eager=False)
-    ranked = global_ordered(
-        daily,
-        [F.col("day")],
-        bucket_key=F.datediff(F.col("day"), F.lit("1970-01-01")),
-        rank_col="t",
-    ).select("y", "t").localCheckpoint(eager=False)
-    m = ranked.agg(
-        F.count(F.lit(1)).cast("long").alias("nd"),
-        F.sum("t").cast("long").alias("st"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("t") * F.col("t")).cast("long").alias("stt"),
-        F.sum(F.col("t") * F.col("y")).cast("long").alias("sty"),
+    )
+    # calendar-bounded day grid (census-allowlisted)
+    ranked = daily.select(
+        "y", F.row_number().over(Window.orderBy("day")).cast("long").alias("t")
+    )
+    w_all = Window.partitionBy()
+    m = ranked.select(
+        "y",
+        "t",
+        F.count(F.lit(1)).over(w_all).cast("long").alias("nd"),
+        F.sum("t").over(w_all).cast("long").alias("st"),
+        F.sum("y").over(w_all).cast("long").alias("sy"),
+        F.sum(F.col("t") * F.col("t")).over(w_all).cast("long").alias("stt"),
+        F.sum(F.col("t") * F.col("y")).over(w_all).cast("long").alias("sty"),
     )
     ndd = F.col("nd").cast("double")
     b = (ndd * F.col("sty") - F.col("st").cast("double") * F.col("sy")) / (
         ndd * F.col("stt") - F.col("st").cast("double") * F.col("st")
     )
     fit = m.select(
+        "y",
+        "t",
         "nd",
         b.alias("b"),
         ((F.col("sy").cast("double") - b * F.col("st")) / ndd).alias("a"),
     )
-    resid = ranked.crossJoin(F.broadcast(fit)).select(
+    resid = fit.select(
         "t",
         F.floor((F.col("y") - F.col("a") - F.col("b") * F.col("t")) * DW_Q + 0.5)
         .cast(dec)
         .alias("eq"),
         "nd",
-    ).localCheckpoint(eager=False)
+    )
     td = F.col("t").cast(dec)
     aux = resid.agg(
         F.max("nd").alias("nd"),
@@ -10483,9 +10461,10 @@ def stat_cointegration_eg(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide-integer fold; γ, SSR (via the γ-identity, no second pass)
     and τ are closed-form doubles evaluated once.
 
-    Scale shape: one fact pass to the day grid, broadcast 1-row fit,
-    rank+1 self-join on the grid for the lag pair — the same bounded
-    machinery as stat_adf."""
+    Scale shape: one fact pass to the calendar-bounded day grid; one
+    unpartitioned window over it carries the long-run OLS moments and
+    the previous day's (x, y), so u_t and u_(t-1) are projections of
+    the same row — the same bounded shape as stat_adf, no join."""
     e = table(spark, sf_dir, "events")
     dec = "decimal(38,0)"
     daily = e.groupBy(F.to_date("ts").alias("day")).agg(
@@ -10503,51 +10482,47 @@ def stat_cointegration_eg(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("y"),
-    ).localCheckpoint(eager=False)
+    )
+    # calendar-bounded day grid (census-allowlisted)
+    w = Window.orderBy("day")
+    w_all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     xd = F.col("x").cast(dec)
-    m = daily.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(xd * F.col("x")).alias("sxx"),
-        F.sum(xd * F.col("y")).alias("sxy"),
+    m = daily.select(
+        "x",
+        "y",
+        F.lag("x").over(w).alias("x1"),
+        F.lag("y").over(w).alias("y1"),
+        F.count(F.lit(1)).over(w_all).cast("long").alias("n"),
+        F.sum("x").over(w_all).cast("long").alias("sx"),
+        F.sum("y").over(w_all).cast("long").alias("sy"),
+        F.sum(xd * F.col("x")).over(w_all).alias("sxx"),
+        F.sum(xd * F.col("y")).over(w_all).alias("sxy"),
     )
     nd = F.col("n").cast("double")
     b = (nd * F.col("sxy").cast("double") - F.col("sx").cast("double") * F.col("sy")) / (
         nd * F.col("sxx").cast("double") - F.col("sx").cast("double") * F.col("sx")
     )
     fit = m.select(
+        "x",
+        "y",
+        "x1",
+        "y1",
         "n",
         b.alias("b"),
         ((F.col("sy").cast("double") - b * F.col("sx")) / nd).alias("a"),
     )
-    resid = daily.crossJoin(F.broadcast(fit)).select(
-        "day",
-        F.floor(F.col("y") - F.col("a") - F.col("b") * F.col("x") + 0.5)
-        .cast("long")
-        .alias("u"),
+
+    def resid(x: str, y: str) -> Column:
+        return F.floor(
+            F.col(y) - F.col("a") - F.col("b") * F.col(x) + 0.5
+        ).cast("long")
+
+    pairs = fit.select(
+        (resid("x", "y") - resid("x1", "y1")).alias("du"),
+        resid("x1", "y1").alias("ul"),
         "n",
-        "b",
-    ).localCheckpoint(eager=False)
-    ranked = global_ordered(
-        resid,
-        [F.col("day")],
-        bucket_key=F.datediff(F.col("day"), F.lit("1970-01-01")),
-        rank_col="t",
-    ).select("u", "n", "b", "t").localCheckpoint(eager=False)
-    a_ = ranked.select(
-        F.col("u").alias("ua"),
-        F.col("t").alias("ta"),
-        F.col("n").alias("n"),
         F.col("b").alias("bb"),
-    )
-    b_ = ranked.select(F.col("u").alias("ub"), F.col("t").alias("tb"))
-    pairs = a_.join(b_, F.col("tb") == F.col("ta") - 1).select(
-        (F.col("ua") - F.col("ub")).alias("du"),
-        F.col("ub").alias("ul"),
-        "n",
-        "bb",
-    )
+    ).where(F.col("ul").isNotNull())
     uld = F.col("ul").cast(dec)
     dud = F.col("du").cast(dec)
     df = pairs.agg(
@@ -11401,19 +11376,21 @@ def stat_siegel_slopes(spark: SparkSession, sf_dir: str) -> DataFrame:
     residuals y - slope·t.
 
     Scale shape: the fact table collapses to the calendar-bounded day
-    grid first, so the pair join is |days|² (metadata-sized); the
-    per-i medians run as PARTITIONED windows over i, and the only
-    global windows are over |days| rows (census-allowlisted)."""
+    grid first, so the pair join is |days|² (metadata-sized) — every
+    pair is needed, so it stays a join; the per-i medians run as
+    PARTITIONED windows over i, and the only global windows (the day
+    rank and count, the two lower-median selections) are over |days|
+    rows (census-allowlisted)."""
     o = table(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
         F.count(F.lit(1)).cast("long").alias("y")
-    ).localCheckpoint(eager=False)
-    ranked = global_ordered(
-        daily,
-        [F.col("day")],
-        bucket_key=F.datediff(F.col("day"), F.lit("1970-01-01")),
-        rank_col="t",
-    ).select("y", "t").localCheckpoint(eager=False)
+    )
+    w_gc = Window.partitionBy()
+    ranked = daily.select(
+        "y",
+        F.row_number().over(Window.orderBy("day")).cast("long").alias("t"),
+        F.count(F.lit(1)).over(w_gc).cast("long").alias("n_days"),
+    )
     a = ranked.select(F.col("y").alias("ya"), F.col("t").alias("ti"))
     b = ranked.select(F.col("y").alias("yb"), F.col("t").alias("tj"))
     slopes = a.join(b, F.col("tj") != F.col("ti")).select(
@@ -11440,7 +11417,6 @@ def stat_siegel_slopes(spark: SparkSession, sf_dir: str) -> DataFrame:
         (2 * F.col("rn") == F.col("np") + 1) | (2 * F.col("rn") == F.col("np"))
     ).select("ti", F.col("sq").alias("m_i"))
     w_g = Window.orderBy("m_i", "ti")
-    w_gc = Window.partitionBy()
     gmed = (
         mi.select(
             "m_i",
@@ -11453,10 +11429,7 @@ def stat_siegel_slopes(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("m_i")
     )
-    n_days = ranked.agg(F.count(F.lit(1)).cast("long").alias("n_days"))
-    fit = gmed.crossJoin(F.broadcast(n_days)).select(
-        "n_days", (F.col("m_i").cast("double") / _SIEGEL_Q).alias("slope")
-    )
+    fit = gmed.select((F.col("m_i").cast("double") / _SIEGEL_Q).alias("slope"))
     resid = ranked.crossJoin(F.broadcast(fit)).select(
         "n_days",
         "slope",
@@ -11637,39 +11610,34 @@ def stat_yule_walker_ar2(spark: SparkSession, sf_dir: str) -> DataFrame:
     the r1/r2 ratios); the closed forms run once.
 
     Scale shape: one hash aggregate to the calendar-bounded hourly
-    grid, two rank-offset self-joins ON THE GRID, one fold each."""
+    grid, one unpartitioned window over it for the grand totals and
+    the lag-1/lag-2 values, one fold."""
     e = table(spark, sf_dir, "events")
     dec = "decimal(38,0)"
     hourly = e.groupBy(F.date_trunc("hour", F.col("ts")).alias("h")).agg(
         F.count(F.lit(1)).cast("long").alias("y")
-    ).localCheckpoint(eager=False)
-    ranked = global_ordered(
-        hourly,
-        [F.col("h")],
-        bucket_key=F.unix_micros(F.col("h")),
-        rank_col="t",
-    ).select("y", "t").localCheckpoint(eager=False)
-    m = ranked.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
+    )
+    # calendar-bounded hour grid (census-allowlisted)
+    w = Window.orderBy("h")
+    w_all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    ranked = hourly.select(
+        "y",
+        F.lag("y", 1).over(w).alias("y1"),
+        F.lag("y", 2).over(w).alias("y2"),
+        F.count(F.lit(1)).over(w_all).cast("long").alias("n"),
+        F.sum("y").over(w_all).cast("long").alias("sy"),
     )
 
-    def _lag_fold(k: int):
-        a = ranked.select(F.col("y").alias("ya"), F.col("t").alias("ta"))
-        b = ranked.select(F.col("y").alias("yb"), F.col("t").alias("tb"))
-        j = a.join(b, F.col("tb") == F.col("ta") - k).crossJoin(F.broadcast(m))
-        za = (F.col("ya") * F.col("n") - F.col("sy")).cast(dec)
-        zb = (F.col("yb") * F.col("n") - F.col("sy")).cast(dec)
-        return j.agg(F.sum(za * zb).alias("s"))
+    def z(c: str) -> Column:
+        return (F.col(c) * F.col("n") - F.col("sy")).cast(dec)
 
-    lag1 = _lag_fold(1).select(F.col("s").alias("s1"))
-    lag2 = _lag_fold(2).select(F.col("s").alias("s2"))
-    z = (F.col("y") * F.col("n") - F.col("sy")).cast(dec)
-    den = (
-        ranked.crossJoin(F.broadcast(m))
-        .agg(F.sum(z * z).alias("s"))
-        .select(F.col("s").alias("sd"))
+    folds = ranked.agg(
+        F.max("n").alias("n"),
+        F.max("sy").alias("sy"),
+        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
+        F.sum(z("y") * z("y1")).alias("s1"),
+        F.sum(z("y") * z("y2")).alias("s2"),
+        F.sum(z("y") * z("y")).alias("sd"),
     )
     r1 = F.col("s1").cast("double") / F.col("sd").cast("double")
     r2 = F.col("s2").cast("double") / F.col("sd").cast("double")
@@ -11679,23 +11647,18 @@ def stat_yule_walker_ar2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("syy").cast("double")
         - F.col("sy").cast("double") * F.col("sy") / F.col("n")
     ) / F.col("n")
-    return (
-        m.crossJoin(F.broadcast(lag1))
-        .crossJoin(F.broadcast(lag2))
-        .crossJoin(F.broadcast(den))
-        .select(
-            F.col("n").alias("n_hours"),
-            q4(r1).alias("r1"),
-            q4(r2).alias("r2"),
-            q4(phi1).alias("phi1"),
-            q4(phi2).alias("phi2"),
-            q4(c0 * (1.0 - r1 * phi1 - r2 * phi2)).alias("noise_var"),
-            (
-                (phi2 + phi1 < 1.0)
-                & (phi2 - phi1 < 1.0)
-                & (F.abs(phi2) < 1.0)
-            ).alias("stationary"),
-        )
+    return folds.select(
+        F.col("n").alias("n_hours"),
+        q4(r1).alias("r1"),
+        q4(r2).alias("r2"),
+        q4(phi1).alias("phi1"),
+        q4(phi2).alias("phi2"),
+        q4(c0 * (1.0 - r1 * phi1 - r2 * phi2)).alias("noise_var"),
+        (
+            (phi2 + phi1 < 1.0)
+            & (phi2 - phi1 < 1.0)
+            & (F.abs(phi2) < 1.0)
+        ).alias("stationary"),
     )
 
 
@@ -11749,25 +11712,28 @@ def stat_cox_stuart(spark: SparkSession, sf_dir: str) -> DataFrame:
     The binomial tail reuses the closed-form ln-factorial (exact
     literals + Stirling — no factorial table), each term quantized at
     1e-15 before the fold, so the p-value is order-free and exact to
-    the quantum; the pairing join is a rank-offset equi-join on the
-    calendar day grid.
+    the quantum; the pairing join is an equi-join on the day rank
+    (its offset n/2 depends on the data, so no constant ``lead``
+    can replace it).
 
-    Scale shape: one hash aggregate to days, one grid self-join, a
-    support explode bounded by m = |days|/2."""
+    Scale shape: one hash aggregate to days, one unpartitioned window
+    over that calendar-bounded grid for the rank and the day count,
+    one grid self-join, a support explode bounded by m = |days|/2."""
     e = table(spark, sf_dir, "events")
     daily = e.groupBy(F.to_date("ts").alias("day")).agg(
         F.count(F.lit(1)).cast("long").alias("y")
-    ).localCheckpoint(eager=False)
-    ranked = global_ordered(
-        daily,
-        [F.col("day")],
-        bucket_key=F.datediff(F.col("day"), F.lit("1970-01-01")),
-        rank_col="t",
-    ).select("y", "t").localCheckpoint(eager=False)
-    ntot = ranked.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    a = ranked.crossJoin(F.broadcast(ntot)).select(
-        F.col("y").alias("ya"), F.col("t").alias("ta"), "n"
     )
+    # calendar-bounded day grid (census-allowlisted)
+    w = Window.orderBy("day")
+    ranked = daily.select(
+        "y",
+        F.row_number().over(w).cast("long").alias("t"),
+        F.count(F.lit(1))
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+        .cast("long")
+        .alias("n"),
+    )
+    a = ranked.select(F.col("y").alias("ya"), F.col("t").alias("ta"), "n")
     b = ranked.select(F.col("y").alias("yb"), F.col("t").alias("tb"))
     half = ((F.col("n") - F.col("n") % 2) / 2).cast("long")
     pairs = (
@@ -12404,32 +12370,26 @@ def stat_runs_up_down(spark: SparkSession, sf_dir: str) -> DataFrame:
     because it looks at local moves, not levels.
 
     Exactness: signs, run counts and n are exact integers from the
-    day grid (a rank+1 self-join and one lag over the nonzero-sign
-    sequence); the z is one double expression.
+    day grid (a ``lead`` over the days and one lag over the
+    nonzero-sign sequence); the z is one double expression.
 
-    Scale shape: one hash aggregate to days, grid-sized join + lag
-    (calendar-bounded, census-allowlisted), one fold."""
+    Scale shape: one hash aggregate to days, two unpartitioned windows
+    over that calendar-bounded grid in the same day order (one sort;
+    census-allowlisted), one fold."""
     e = table(spark, sf_dir, "events")
     daily = e.groupBy(F.to_date("ts").alias("day")).agg(
         F.count(F.lit(1)).cast("long").alias("y")
-    ).localCheckpoint(eager=False)
-    ranked = global_ordered(
-        daily,
-        [F.col("day")],
-        bucket_key=F.datediff(F.col("day"), F.lit("1970-01-01")),
-        rank_col="t",
-    ).select("y", "t").localCheckpoint(eager=False)
-    a = ranked.select(F.col("y").alias("ya"), F.col("t").alias("ta"))
-    b = ranked.select(F.col("y").alias("yb"), F.col("t").alias("tb"))
-    diffs = a.join(b, F.col("tb") == F.col("ta") + 1).select(
-        F.col("ta").alias("t"),
-        F.when(F.col("yb") > F.col("ya"), 1)
-        .when(F.col("yb") < F.col("ya"), -1)
+    )
+    w = Window.orderBy("day")
+    y_next = F.lead("y").over(w)
+    diffs = daily.select(
+        "day",
+        F.when(y_next > F.col("y"), 1)
+        .when(y_next < F.col("y"), -1)
         .otherwise(0)
         .alias("sgn"),
     )
     nz = diffs.where(F.col("sgn") != 0)
-    w = Window.orderBy("t")
     seq = nz.select(
         "sgn", (F.col("sgn") == F.lag("sgn").over(w)).alias("same")
     )
@@ -12653,7 +12613,7 @@ def stat_sprt_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = global_ordered(
         seq,
         [F.col("event_id")],
-        bucket_key=F.col("event_id"),
+        bucket_key="event_id",
         sums={"x": "cum_x"},
         rank_col="rk",
     ).localCheckpoint(eager=False)

@@ -347,18 +347,14 @@ _OP_MODULES = [
 # untouched.  One edge is inherited from CacheManager's plan-equality
 # matching: if the host cached the SAME canonical plan a build also
 # persists, they share one entry and the release drops it (the host's
-# frame recomputes — again perf only).  Set ``AUTO_RELEASE_CACHES =
-# False`` to opt out (e.g. a notebook that deliberately shares caches
-# across queries).
+# frame recomputes — again perf only).
 #
 # Thread-safety: the module globals below (depth counter, last key,
 # tracked lists) assume SEQUENTIAL top-level builds in one driver
 # thread — the contract every harness here has (grading driver,
 # check.py, bench.py, pytest).  Concurrent job submission from
 # multiple driver threads would race the depth counter and could
-# release one thread's frames mid-build; such a host should set
-# AUTO_RELEASE_CACHES = False and manage its own cache lifecycle.
-AUTO_RELEASE_CACHES = True
+# release one thread's frames mid-build.
 _build_depth = 0
 _last_top_key: str | None = None
 _tracked_frames: list[DataFrame] = []  # persisted by the current top key
@@ -459,7 +455,7 @@ def _with_cache_release(fn: BuildFn, name: str | None = None) -> BuildFn:
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
         global _build_depth, _last_top_key
-        if _build_depth == 0 and AUTO_RELEASE_CACHES:
+        if _build_depth == 0:
             key = name or fn.__name__
             if _last_top_key is not None and _last_top_key != key:
                 _release_tracked(spark)

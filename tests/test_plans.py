@@ -6,6 +6,9 @@ from __future__ import annotations
 
 import contextlib
 import io
+import time
+
+import pytest
 
 from etl_cnc_spark.registry import load_all
 
@@ -379,6 +382,60 @@ def test_value_grid_folds_have_no_unpartitioned_window(spark, sf_dir):
                 assert "_pid" in line, (key, line)
 
 
+# Calendar-bounded series keys that rank, lag and total their grid in
+# one unpartitioned window (census-allowlisted) instead of the bucketed
+# prefix machine.  cox_stuart (offset n/2 depends on the data) and
+# siegel (every pair) keep their grid self-join.
+PLAIN_WINDOW_SERIES_KEYS = (
+    "stat_kpss",
+    "stat_adf",
+    "stat_yule_walker_ar2",
+    "stat_ccf",
+    "stat_cox_stuart",
+    "stat_runs_up_down",
+    "stat_newey_west",
+    "stat_white_test",
+    "stat_siegel_slopes",
+    "stat_cointegration_eg",
+    "events_logrank_test",
+)
+_GRID_SELF_JOIN_KEYS = {"stat_cox_stuart", "stat_siegel_slopes"}
+
+
+@pytest.mark.parametrize("key", PLAIN_WINDOW_SERIES_KEYS)
+def test_calendar_series_rank_with_plain_window(key, spark, sf_dir):
+    """No prefix machine (no ``_pid`` bucket column in the executed
+    plan), lags as ``lag``/``lead`` columns rather than shuffled rank
+    self-joins, and no reuse point: ``build()`` launches no Spark job
+    (a lazy localCheckpoint runs its input's jobs at build time)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    REGISTRY[key].build(spark, sf_dir)  # warm the per-session table handles
+    group = f"plain-window-build-{key}"
+    sc.setJobGroup(group, key)
+    try:
+        df = REGISTRY[key].build(spark, sf_dir)
+        # the status store is fed in order by the listener bus: once a
+        # later sentinel job is visible, every build job is too
+        sc.setJobGroup(f"{group}-sentinel", key)
+        spark.range(1).collect()
+        for _ in range(200):
+            if tracker.getJobIdsForGroup(f"{group}-sentinel"):
+                break
+            time.sleep(0.01)
+        build_jobs = tracker.getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not build_jobs, (key, build_jobs)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "_pid" not in plan, plan
+    if key not in _GRID_SELF_JOIN_KEYS:
+        assert "SortMergeJoin" not in plan, plan
+        assert "ShuffledHashJoin" not in plan, plan
+
+
 def test_skyline_bucket_prefilter_prunes(spark, sf_dir):
     """orders_skyline's coarse price-bucket prune must survive in the
     plan: the candidate scan joins the broadcast bucket-cut table on
@@ -681,6 +738,35 @@ def test_unpartitioned_window_census():
             "two lower-median selections over |days|-sized frames "
             "(per-day repeated medians, then residual median) — "
             "calendar-bounded",
+        # calendar-bounded series ranked with one plain window (they
+        # left the bucketed prefix machine; their oracles use the same
+        # row_number/lag shape)
+        ("operators/stats.py", "stat_kpss"):
+            "one row per hour — calendar-bounded (rank, running sum, "
+            "grand totals and lags 1-6 over the hourly grid)",
+        ("operators/stats.py", "stat_adf"):
+            "one row per hour — calendar-bounded (lag 1 over the hourly "
+            "grid)",
+        ("operators/stats.py", "stat_yule_walker_ar2"):
+            "one row per hour — calendar-bounded (grand totals and lags "
+            "1-2 over the hourly grid)",
+        ("operators/stats.py", "stat_ccf"):
+            "one row per day — calendar-bounded (moments and leads "
+            "-7..7 over the daily grid)",
+        ("operators/stats.py", "stat_cox_stuart"):
+            "one row per day — calendar-bounded (day rank and count)",
+        ("operators/stats.py", "stat_newey_west"):
+            "one row per day — calendar-bounded (day rank and lags "
+            "1-16 over the daily order grid)",
+        ("operators/stats.py", "stat_white_test"):
+            "one row per day — calendar-bounded (day rank over the "
+            "daily order grid)",
+        ("operators/stats.py", "stat_cointegration_eg"):
+            "one row per day — calendar-bounded (OLS moments and lag 1 "
+            "over the daily revenue grid)",
+        ("operators/analytics.py", "events_logrank_test"):
+            "one row per lifetime day — calendar-bounded (at-risk "
+            "prefix and group totals, same grid as events_km_greenwood)",
     }
 
     root = pathlib.Path(__file__).resolve().parent.parent / "etl_cnc_spark"

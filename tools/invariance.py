@@ -17,6 +17,10 @@ Axes (pick one per run):
   --axis arrow   arrow.maxRecordsPerBatch=7: every mapInArrow /
                  mapInPandas / pandas-UDF operator sees many tiny
                  batches — catches whole-partition-batch assumptions.
+  --axis rebuild the default tuned session; each key is built and
+                 collected 3x with ``registry.release_caches`` between
+                 builds — catches staged outputs that append across
+                 builds and reuse points that go stale on a rebuild.
 
 Usage::
 
@@ -39,7 +43,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import SparkSession  # noqa: E402
 
 from etl_cnc_spark.oracle import compare  # noqa: E402
-from etl_cnc_spark.registry import load_all  # noqa: E402
+from etl_cnc_spark.registry import load_all, release_caches  # noqa: E402
+from etl_cnc_spark.session import get_spark  # noqa: E402
 
 AXES = {
     "cpus": {
@@ -63,7 +68,9 @@ AXES = {
             "spark.sql.adaptive.enabled": "false",
         },
     },
+    "rebuild": None,  # the default session, REBUILDS builds per key
 }
+REBUILDS = 3
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -81,27 +88,36 @@ def main(argv: list[str] | None = None) -> int:
         return 2
 
     axis = AXES[args.axis]
-    b = (
-        SparkSession.builder.master(axis["master"])
-        .appName(f"invariance-{args.axis}")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.ui.enabled", "false")
-    )
-    for k, v in axis["conf"].items():
-        b = b.config(k, v)
-    spark = b.getOrCreate()
+    if axis is None:
+        spark, builds = get_spark(f"invariance-{args.axis}"), REBUILDS
+    else:
+        b = (
+            SparkSession.builder.master(axis["master"])
+            .appName(f"invariance-{args.axis}")
+            .config("spark.sql.session.timeZone", "UTC")
+            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+            .config("spark.driver.memory", "8g")
+            .config("spark.ui.enabled", "false")
+        )
+        for k, v in axis["conf"].items():
+            b = b.config(k, v)
+        spark, builds = b.getOrCreate(), 1
     spark.sparkContext.setLogLevel("ERROR")
 
     fails = 0
     for k in keys:
         t0 = time.time()
-        try:
-            res = compare(reg[k], spark, args.sf)
-            ok, detail = res.ok, res.detail
-        except Exception as exc:  # noqa: BLE001 - report and continue
-            ok, detail = False, f"EXC {type(exc).__name__}: {str(exc)[:160]}"
+        for i in range(builds):
+            if i:
+                release_caches(spark)
+            try:
+                res = compare(reg[k], spark, args.sf)
+                ok, detail = res.ok, res.detail
+            except Exception as exc:  # noqa: BLE001 - report and continue
+                ok, detail = False, f"EXC {type(exc).__name__}: {str(exc)[:160]}"
+            if not ok:
+                detail = f"build {i + 1}: {detail}"
+                break
         if ok:
             print(f"ok   {k:30s} {time.time() - t0:5.1f}s", flush=True)
         else:
